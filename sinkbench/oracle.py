@@ -1,68 +1,33 @@
 """Registry check: each sampled query's result, as the program wrote it to
 parquet, must equal DuckDB's run of the query's oracle SQL over the same
-tables. Columns are compared by name, rows as a multiset."""
+tables. The comparison is the repository's own correctness gate
+(`scripts/oracle_check.py`): oracle type lint, column names, row count,
+dtype parity, then exact values with rows sorted."""
+import sys
 from pathlib import Path
 
 import duckdb
-import numpy as np
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+from oracle_check import TABLES, compare, oracle_type_lint  # noqa: E402
 
 
-def _norm(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1).copy()
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            df[c] = s.astype("datetime64[us]")
-        elif pd.api.types.is_bool_dtype(s):
-            df[c] = s.astype("object").map(lambda v: None if pd.isna(v) else str(bool(v)))
-        elif pd.api.types.is_numeric_dtype(s):
-            df[c] = s.astype("float64")
-        else:
-            df[c] = s.map(lambda v: None if v is None or (isinstance(v, float) and np.isnan(v))
-                          else str(v.tolist() if hasattr(v, "tolist") else v))
-    if len(df.columns):
-        df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="last")
-    return df.reset_index(drop=True)
-
-
-def compare(got: pd.DataFrame, want: pd.DataFrame) -> list[str]:
-    if sorted(got.columns) != sorted(want.columns):
-        return [f"columns differ: got {sorted(got.columns)}, want {sorted(want.columns)}"]
-    if len(got) != len(want):
-        return [f"row count differs: got {len(got)}, want {len(want)}"]
-    g, w = _norm(got), _norm(want)
-    errs = []
-    for c in g.columns:
-        gv, wv = g[c], w[c]
-        if gv.dtype == "float64" and wv.dtype == "float64":
-            same = np.isclose(gv.to_numpy(), wv.to_numpy(), rtol=1e-9, atol=0.0, equal_nan=True)
-        else:
-            same = (gv.astype(str) == wv.astype(str)).to_numpy()
-        if not same.all():
-            i = int(np.argmin(same))
-            errs.append(f"column {c}: {int((~same).sum())} values differ, first at row {i}: "
-                        f"got {gv.iloc[i]!r}, want {wv.iloc[i]!r}")
-    return errs
-
-
-def check_registry(sf_dir: str, results: Path, names: list[str]) -> list[str]:
+def check_registry(tables_dir: str, results: Path, names: list[str]) -> list[str]:
     """`results` holds <name>/ (parquet written by the program) and
     <name>.sql (the query's oracle SQL) for each name."""
     con = duckdb.connect()
     for t in TABLES:
-        if (Path(sf_dir) / f"{t}.parquet").exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        if (Path(tables_dir) / f"{t}.parquet").exists():
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tables_dir}/{t}.parquet'")
     errs = []
     for n in names:
         try:
             got = pd.read_parquet(results / n)
-            want = con.execute((results / f"{n}.sql").read_text()).fetchdf()
+            sql = (results / f"{n}.sql").read_text()
+            want = con.execute(sql).fetchdf()
         except Exception as e:  # a missing result or a failing oracle is a failed check
             errs.append(f"{n}: {e}")
             continue
-        errs += [f"{n}: {e}" for e in compare(got, want)]
+        errs += [f"{n}: {e}" for e in oracle_type_lint(con, n, sql) + compare(n, got, want)]
     return errs

@@ -22,11 +22,11 @@ from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 sys.path.insert(0, str(HERE))
+# no __pycache__ here or beside scripts/oracle_check.py, which oracle.py imports
+sys.dont_write_bytecode = True
 import build  # noqa: E402
 
 WORKLOADS = ["backfill_pb", "backfill_json", "live_1s", "registry"]
-# registry tables (the sf0.01 set of TESTDATA.md); only the registry reads them
-SF_DIR = os.environ.get("SINKBENCH_SF_DIR", "")
 DEADLINE_S = 170
 JAVA_OPTS = ["-Xmx3g", "-Xss8m", "-XX:+UseG1GC", "-XX:-UsePerfData",
              f"-Dlog4j.configurationFile={HERE / 'log4j2.properties'}"] + [
@@ -103,21 +103,25 @@ def main() -> int:
         if a.selftest:
             java(classes, ["selftest", str(work)], work, DEADLINE_S)
             return 0
-        if a.workload == "registry" and not (SF_DIR and Path(SF_DIR).is_dir()):
-            print(f"[sinkbench] registry: set SINKBENCH_SF_DIR to the sf0.01 tables ({SF_DIR!r})",
-                  file=sys.stderr)
-            return 2
         before = context()
+        # set-up starts here, after the build and the probe: setup_s runs
+        # from this instant to the end of the workload's set-up in the JVM
+        origin_ms = int(time.time() * 1000)
+        tables_dir = work / "tables"
+        if a.workload == "registry":
+            import registry_tables
+            registry_tables.write(tables_dir, a.seed)
         result_file = work / "result.json"
         java(classes, [a.workload, str(a.seed), str(a.seconds), str(a.trace), str(work),
-                       str(result_file), SF_DIR], work, DEADLINE_S - (time.monotonic() - started))
+                       str(result_file), str(origin_ms), str(tables_dir)],
+             work, DEADLINE_S - (time.monotonic() - started))
         out = json.loads(result_file.read_text())
         errors = list(out["errors"])
         if a.workload == "registry":
             import oracle
             results = work / "registry"
             names = sorted(p.stem for p in results.glob("*.sql"))
-            errors += oracle.check_registry(SF_DIR, results, names)
+            errors += oracle.check_registry(str(tables_dir), results, names)
         after = context()
         ctx = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds, "trace": a.trace,
                "steal_s": round(after["steal_s"] - before["steal_s"], 3),
@@ -141,8 +145,7 @@ def main() -> int:
         print(f"[sinkbench] run failed: {e}", file=sys.stderr)
         return 1
     finally:
-        if not os.environ.get("SINKBENCH_KEEP"):
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

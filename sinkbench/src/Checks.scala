@@ -59,6 +59,8 @@ object Expect {
 object Checks {
   val HourColumn = "received_hour"
   val BucketColumn = "vehicle_bucket"
+  /** Directory level above a drain's landing and dead-letter dirs. */
+  val DrainColumn = "drain"
 
   private def exists(path: String): Boolean = Files.exists(Paths.get(path))
 
@@ -67,8 +69,8 @@ object Checks {
   def parquetRows(spark: SparkSession, path: String): Long =
     if (exists(path)) spark.read.parquet(path).count() else 0L
 
-  /** Reads a partitioned landing with its directory values as strings. */
-  def readLanding(spark: SparkSession, path: String): DataFrame = {
+  /** Reads a partitioned directory with its directory values as strings. */
+  def readPartitioned(spark: SparkSession, path: String): DataFrame = {
     val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -76,13 +78,15 @@ object Checks {
     finally spark.conf.set(key, prev)
   }
 
-  /** Landed rows against the generator: counts, per-column aggregates, and
-    * every row in the hour × bucket directory its own values imply. */
-  def landing(spark: SparkSession, path: String, deadDir: String, e: Expect): Seq[String] = {
-    val errs = Seq.newBuilder[String]
-    def cmp(what: String, got: Any, want: Any): Unit =
-      if (got != want) errs += s"$what: got $got, want $want"
-    // one pass over the landing: per-directory aggregates, merged here
+  /** Landed rows of every drain against the generator: counts, per-column
+    * aggregates, and every row in the hour × bucket directory its own
+    * values imply. Drain `d` lands in `<root>/drain=d` and dead-letters
+    * to `<deadRoot>/drain=d`; one pass over each root checks them all.
+    * `inputRows(d)` is the drain's `numInputRows` from its progress
+    * reports: what it read, less what it landed and dead-lettered, is what
+    * it dropped as undecodable. */
+  def landings(spark: SparkSession, root: String, deadRoot: String, inputRows: Map[Int, Long],
+      e: Expect): Seq[String] = {
     val cols = e.nulls.keys.toSeq.sorted
     val hourOf = udf((ts: java.sql.Timestamp) => Gen.HourFmt.format(ts.toInstant))
     val bucketOf = udf((v: String) => Expect.bucket(v).toString)
@@ -94,16 +98,32 @@ object Checks {
       unix_micros(min(col("tst"))).as("min_tst"), unix_micros(max(col("tst"))).as("max_tst"),
       collect_set(col("unique_vehicle_id")).as("vehicles")) ++
       cols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n_$c"))
+    // one pass over the landings: per drain × directory aggregates
     val dirs =
-      if (!exists(path)) Array.empty[Row]
-      else readLanding(spark, path).groupBy(HourColumn, BucketColumn)
+      if (!exists(root)) Array.empty[Row]
+      else readPartitioned(spark, root).groupBy(DrainColumn, HourColumn, BucketColumn)
         .agg(aggs.head, aggs.tail: _*).collect()
+    val dead =
+      if (!exists(deadRoot)) Map.empty[String, Long]
+      else readPartitioned(spark, deadRoot).groupBy(DrainColumn).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    inputRows.toSeq.sortBy(_._1).flatMap { case (d, in) =>
+      drain(dirs.filter(_.getAs[String](DrainColumn) == d.toString),
+        dead.getOrElse(d.toString, 0L), in, cols, e).map(x => s"drain $d: $x")
+    }
+  }
+
+  /** One drain's checks over its directory aggregates. */
+  private def drain(dirs: Array[Row], dead: Long, inputRows: Long, cols: Seq[String],
+      e: Expect): Seq[String] = {
+    val errs = Seq.newBuilder[String]
+    def cmp(what: String, got: Any, want: Any): Unit =
+      if (got != want) errs += s"$what: got $got, want $want"
     def total(c: String): Long = dirs.map(_.getAs[Long](c)).sum
     val landed = total("rows")
-    val dead = parquetRows(spark, deadDir)
     cmp("landed rows", landed, e.landed)
     cmp("dead-lettered rows", dead, e.dead)
-    cmp("undecodable records", e.records - landed - dead, e.undecodable)
+    cmp("undecodable records", inputRows - landed - dead, e.undecodable)
     cols.foreach(c => cmp(s"nulls in $c", total(s"n_$c"), e.nulls(c)))
     cmp("sum(veh)", total("sum_veh"), e.sumVeh)
     cmp("sum(tsi)", total("sum_tsi"), e.sumTsi)
@@ -115,7 +135,8 @@ object Checks {
       dirs.flatMap(_.getAs[scala.collection.Seq[String]]("vehicles")).distinct.length.toLong,
       e.distinctVehicles)
     cmp("rows in the wrong hour/bucket directory", total("misplaced"), 0L)
-    val perDir = dirs.map(x => (x.getString(0), x.getString(1)) -> x.getAs[Long]("rows")).toMap
+    val perDir = dirs.map(x => (x.getAs[String](HourColumn), x.getAs[String](BucketColumn)) ->
+      x.getAs[Long]("rows")).toMap
     val wrongDirs = (perDir.keySet ++ e.perDir.keySet).filter(k => perDir.get(k) != e.perDir.get(k))
     wrongDirs.toSeq.sorted.take(3).foreach(k =>
       cmp(s"rows in directory $k", perDir.getOrElse(k, 0L), e.perDir.getOrElse(k, 0L)))

@@ -29,7 +29,7 @@ final case class Outcome(
  * its outputs against the generator (or, for the registry, leaves the
  * results for the DuckDB comparison in `run.py`).
  *
- * Usage: Main <workload> <seed> <seconds> <trace 0|1> <workDir> <resultFile> [sfDir]
+ * Usage: Main <workload> <seed> <seconds> <trace 0|1> <workDir> <resultFile> <originMs> <tablesDir>
  *        Main selftest <workDir>
  */
 object Main {
@@ -43,17 +43,15 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
     if (args.headOption.contains("selftest")) {
       val spark = session(Paths.get(args(1)))
       val failures = try SelfTest.run(spark, Paths.get(args(1))) finally spark.stop()
       if (failures.nonEmpty) { failures.foreach(f => System.err.println(s"FAIL $f")); sys.exit(1) }
       return
     }
-    val Array(workload, seed, seconds, trace, work, resultFile) = args.take(6)
+    val Array(workload, seed, seconds, trace, work, resultFile, originMs, tablesDir) = args
     val workDir = Paths.get(work)
-    val ctx = Ctx(seed.toLong, seconds.toInt, trace == "1", workDir, jvmStartMs,
-      args.lift(6).getOrElse(""))
+    val ctx = Ctx(seed.toLong, seconds.toInt, trace == "1", workDir, originMs.toLong, tablesDir)
     val spark = session(workDir)
     val out =
       try workload match {
@@ -84,11 +82,12 @@ object Main {
 
 /** Run parameters shared by the workloads. */
 final case class Ctx(seed: Long, seconds: Int, trace: Boolean, work: Path,
-    jvmStartMs: Long, sfDir: String) {
+    originMs: Long, tablesDir: String) {
   def dir(name: String): String = work.resolve(name).toString
-  /** Process start until now: the cold set-up of this run. */
-  def setupSeconds(): Double = (System.currentTimeMillis() - jvmStartMs) / 1000.0
-  /** Progress line on stderr, stamped with seconds since process start. */
+  /** Start of the run's set-up (stamped by `run.py` before it writes any
+    * input or starts this JVM) until now: the cold set-up of this run. */
+  def setupSeconds(): Double = (System.currentTimeMillis() - originMs) / 1000.0
+  /** Progress line on stderr, stamped with seconds since set-up start. */
   def phase(what: String): Unit = System.err.println(f"[sinkbench] ${setupSeconds()}%7.2f s  $what")
 }
 
@@ -226,11 +225,15 @@ object Backfill {
     spark.streams.addListener(progress)
     val setupS = ctx.setupSeconds()
 
-    def drain(i: Int, from: Path = input): (Double, Seq[StreamingQueryProgress]) = {
+    // drain i lands in landings/drain=i and dead-letters to deads/drain=i,
+    // so one pass over each root checks every drain; the warm-up drain
+    // writes beside them
+    def drain(i: Int, from: Path = input, root: String = ""): (Double, Seq[StreamingQueryProgress]) = {
       val cfg = HfpStreamPipeline.Config(
         checkpointDir = ctx.dir(s"checkpoint-$i"), availableNow = true,
-        deadLetterDir = Some(ctx.dir(s"dead-$i")), source = Some(spec(from)))
-      val sink = new TimedSink(s"drain-$i", new PartitionedVehiclesSink(ctx.dir(s"landing-$i")))
+        deadLetterDir = Some(ctx.dir(s"${root}deads/drain=$i")), source = Some(spec(from)))
+      val sink = new TimedSink(s"drain-$i",
+        new PartitionedVehiclesSink(ctx.dir(s"${root}landings/drain=$i")))
       val t0 = System.nanoTime()
       val q = HfpStreamPipeline.start(spark, cfg, sink)
       q.awaitTermination()
@@ -241,44 +244,40 @@ object Backfill {
 
     ctx.phase("inputs written")
     // JIT and codegen warm-up: a smaller backlog of the same make-up, not timed
-    drain(0, warmInput)
+    drain(0, warmInput, root = "warm-")
     ctx.phase("warm-up drain done")
     val jobs = if (ctx.trace) Some(new JobGroupListener) else None
     jobs.foreach(spark.sparkContext.addSparkListener)
     val jvm0 = JvmSnap.now()
     val walls = mutable.ArrayBuffer.empty[Double]
+    val inputRows = mutable.ArrayBuffer.empty[Long]
     val reports = mutable.ArrayBuffer.empty[StreamingQueryProgress]
     val prefixes = mutable.ArrayBuffer.empty[PrefixTimes]
     var heapMax = 0.0
     val deadline = System.nanoTime() + ctx.seconds * 1000000000L
     while (System.nanoTime() < deadline) {
       val (s, ps) = drain(walls.size + 1)
-      walls += s; reports ++= ps
+      walls += s; reports ++= ps; inputRows += ps.map(_.numInputRows).sum
       if (ctx.trace) prefixes += Prefixes.time(spark, input.toString, protobuf)
       heapMax = math.max(heapMax, JvmSnap.heapAfterGcMb())
     }
     val (gcS, cpuS) = JvmSnap.now().since(jvm0)
     ctx.phase(s"${walls.size} timed drains done")
-    val errors = (1 to walls.size).flatMap { i =>
-      Checks.landing(spark, ctx.dir(s"landing-$i"), ctx.dir(s"dead-$i"), expect)
-        .map(e => s"drain $i: $e")
-    }
+    val errors = Checks.landings(spark, ctx.dir("landings"), ctx.dir("deads"),
+      inputRows.zipWithIndex.map { case (n, i) => (i + 1) -> n }.toMap, expect)
     ctx.phase("outputs checked")
     val rates = walls.map(expect.landed / _)
     val e2e = Seq(
       ("setup_s", setupS, "s"),
       ("throughput_per_s", Stats.median(rates.toSeq), "1/s"),
-      ("latency_p50_s", Stats.median(walls.toSeq), "s"),
-      // one micro-batch per drain: the 90th-percentile record lands with
-      // the rest, at the end of its drain
-      ("latency_p90_s", Stats.median(walls.toSeq), "s"))
+      ("latency_p50_s", Stats.median(walls.toSeq), "s"))
     val info = Seq("drains" -> walls.size.toDouble, "records_per_drain" -> Records.toDouble,
       "landed_per_drain" -> expect.landed.toDouble)
     val layers =
       if (!ctx.trace) Nil
       else {
         val spans = (1 to walls.size).flatMap(i => TimedSink.of(s"drain-$i"))
-        val (files, bytes) = Layers.filesAndBytes(ctx.dir("landing-1"))
+        val (files, bytes) = Layers.filesAndBytes(ctx.dir("landings/drain=1"))
         val streamJobs = jobs.get.sum(g => reports.exists(_.runId.toString == g)).jobs
         def med(f: PrefixTimes => Double): Double = Stats.median(prefixes.map(f).toSeq)
         val (dec, split, flat) = (med(_.envelopeS), med(_.splitS), med(_.flattenS))
@@ -289,7 +288,7 @@ object Backfill {
           "sources.records_in" -> recordsIn, "sources.envelopes_out" -> envelopes,
           "sources.undecodable" -> (recordsIn - envelopes),
           "operators.split_s" -> (split - dec),
-          "operators.dead_rows" -> Checks.parquetRows(spark, ctx.dir("dead-1")).toDouble,
+          "operators.dead_rows" -> Checks.parquetRows(spark, ctx.dir("deads/drain=1")).toDouble,
           "operators.flatten_s" -> (flat - split),
           "streaming.sink_write_s" -> Stats.median(spans.map(_.nanos / 1e9)),
           "streaming.sink_files" -> files.toDouble, "streaming.sink_bytes" -> bytes.toDouble,
@@ -349,7 +348,7 @@ object Live {
   val RowsPerSecond = 2000
   val TickMs = 100
   val WarmupSeconds = 3
-  val WarmupDrains = 2
+  val WarmupDrains = 1
   val Mix = sinkbench.Mix(deadPerMille = 5, undecodablePerMille = 0)
   val Table = "vehicles"
   val WarmTable = "vehicles_warm"
@@ -406,6 +405,7 @@ object Live {
         source = Some(SourceFactory.SourceSpec.FileJson(warmInput.toString))),
         new JdbcVehiclesSink(sinkUrl, WarmTable, idempotent = true)).awaitTermination()
     }
+    ctx.phase("warm-up drains done")
     CountingJdbc.connections.set(0); CountingJdbc.ddlFailed.set(0)
     val q = HfpStreamPipeline.start(spark,
       HfpStreamPipeline.Config(checkpointDir = checkpoint, deadLetterDir = Some(ctx.dir("dead")),
@@ -433,6 +433,7 @@ object Live {
     val (gcS, cpuS) = JvmSnap.now().since(jvm0)
     q.stop()
     org.apache.spark.SinkbenchListenerBus.drain(spark.sparkContext)
+    ctx.phase("live query drained and stopped")
 
     // file → batch from the checkpoint's source log, batch → commit time
     // from the timed sink
@@ -440,34 +441,40 @@ object Live {
     val commitMs = TimedSink.of("live").map(s => s.batchId -> s.endMs).toMap
     val goodCount = recs.count(_.kind == Kind.Good).toLong
     val deadCount = recs.length - goodCount
-    val fresh = mutable.ArrayBuffer.empty[Double]
-    val windowBatches = mutable.Set.empty[Long]
+    // freshness of each good window record, by the batch that committed it
+    val fresh = mutable.Map.empty[Long, mutable.ArrayBuffer[Double]]
     var missing = 0
     (WarmupSeconds * 1000 / TickMs until ticks).foreach { k =>
       val due = t0 + k.toLong * TickMs
       val good = recs.slice(k * perTick, (k + 1) * perTick).count(_.kind == Kind.Good)
       fileBatch.get(f"tick-$k%05d.json").flatMap(b => commitMs.get(b).map(b -> _)) match {
         case Some((b, end)) =>
-          windowBatches += b
-          (0 until good).foreach(_ => fresh += (end - due) / 1000.0)
+          fresh.getOrElseUpdate(b, mutable.ArrayBuffer.empty[Double]) ++=
+            Seq.fill(good)((end - due) / 1000.0)
         case None => missing += 1
       }
     }
     val errors = Checks.jdbcLanding(spark, url, Table, ctx.dir("dead"), goodCount, deadCount) ++
       Option.when(missing > 0)(s"$missing tick files never committed by a sink write")
+    ctx.phase("outputs checked")
+    val windowBatches = fresh.keySet
     val windowReports = progress.progress.filter(p => p.runId == q.runId && windowBatches(p.batchId))
-    // delivered rate: good window records over the span from the first
-    // window record's due time to the commit of the last one
-    val windowStart = t0 + WarmupSeconds * 1000L
-    val lastCommit = windowBatches.flatMap(commitMs.get).maxOption.getOrElse(windowStart)
+    // capacity, not the offered rate: a window batch's rows per second of
+    // its trigger
+    val batchRates = windowReports.flatMap(p =>
+      Option(p.durationMs.get("triggerExecution")).filter(_ > 0).map(p.numInputRows * 1000.0 / _))
+    // every figure is a median over the window's batches, so a stall in a
+    // few triggers moves a few samples, as a slow drain or pass does on
+    // the closed-loop workloads
+    def overBatches(p: Double): Double = Stats.median(fresh.values.map(f => Stats.pct(f.toSeq, p)).toSeq)
+    val allFresh = fresh.values.flatten.toSeq
     val e2e = Seq(
       ("setup_s", setupS, "s"),
-      ("throughput_per_s", if (lastCommit > windowStart) fresh.size * 1000.0 / (lastCommit - windowStart) else 0.0, "1/s"),
-      ("latency_p50_s", Stats.median(fresh.toSeq), "s"),
-      // a tail that one slow trigger out of the window's ~25 does not set
-      ("latency_p90_s", if (fresh.isEmpty) 0.0 else Stats.pct(fresh.toSeq, 90), "s"))
-    val info = Seq("freshness_samples" -> fresh.size.toDouble,
-      "freshness_p95_s" -> (if (fresh.isEmpty) 0.0 else Stats.pct(fresh.toSeq, 95)),
+      ("throughput_per_s", Stats.median(batchRates.toSeq), "1/s"),
+      ("latency_p50_s", overBatches(50), "s"))
+    val info = Seq("freshness_p90_s" -> overBatches(90), "freshness_samples" -> allFresh.size.toDouble,
+      "freshness_records_p90_s" -> (if (allFresh.isEmpty) 0.0 else Stats.pct(allFresh, 90)),
+      "freshness_records_p95_s" -> (if (allFresh.isEmpty) 0.0 else Stats.pct(allFresh, 95)),
       "window_batches" -> windowBatches.size.toDouble, "generator_late_ms_max" -> late.toDouble)
     val layers =
       if (!ctx.trace) Nil
@@ -509,8 +516,8 @@ object SourceLog {
 
 /**
  * registry: one closed-loop client runs a fixed sample of oracle-backed
- * registry queries, pass after pass, over the fixed sf0.01 tables. Its
- * inputs do not depend on the seed.
+ * registry queries, pass after pass, over the seeded tables `run.py`
+ * writes (sf0.01 schemas and sizes, `registry_tables.py`).
  */
 object Registry {
   /** Oracle-backed queries that each run in about a second or less at
@@ -522,7 +529,7 @@ object Registry {
   val WarmupPasses = 3
 
   def run(spark: SparkSession, ctx: Ctx): Outcome = {
-    require(Files.isDirectory(Paths.get(ctx.sfDir)), s"registry tables not found at ${ctx.sfDir}")
+    require(Files.isDirectory(Paths.get(ctx.tablesDir)), s"registry tables not found at ${ctx.tablesDir}")
     val queries = SparkEntry.queries
     val oracle = SparkEntry.oracleSql
     val missing = Sample.filterNot(n => queries.contains(n) && oracle.contains(n))
@@ -533,45 +540,51 @@ object Registry {
 
     val build = mutable.ArrayBuffer.empty[Double]
     val latencies = mutable.ArrayBuffer.empty[Double]
+    val perQuery = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
+    // the first warm-up pass writes each result to parquet, with the
+    // query's oracle SQL beside it, for the DuckDB comparison in run.py;
+    // the other passes write to the noop sink
+    val out = ctx.work.resolve("registry")
+    Files.createDirectories(out)
     def pass(timed: Boolean, p: Int): Unit = Sample.foreach { n =>
       val sc = spark.sparkContext
       val t0 = System.nanoTime()
       if (ctx.trace) sc.setJobGroup(s"build-$p", n)
-      val df = queries(n)(spark, ctx.sfDir)
+      val df = queries(n)(spark, ctx.tablesDir)
       val t1 = System.nanoTime()
       if (ctx.trace) sc.setJobGroup(s"exec-$p", n)
-      df.write.format("noop").mode("overwrite").save()
+      if (p == -1) {
+        df.write.parquet(out.resolve(n).toString)
+        Files.write(out.resolve(n + ".sql"), oracle(n).getBytes(UTF_8))
+      } else df.write.format("noop").mode("overwrite").save()
       if (ctx.trace) sc.clearJobGroup()
-      if (timed) { build += (t1 - t0) / 1e9; latencies += (System.nanoTime() - t0) / 1e9 }
+      if (timed) {
+        val wall = (System.nanoTime() - t0) / 1e9
+        build += (t1 - t0) / 1e9; latencies += wall
+        perQuery.getOrElseUpdate(n, mutable.ArrayBuffer.empty[Double]) += wall
+      }
     }
-    (1 to WarmupPasses).foreach(p => pass(timed = false, -p))
+    ctx.phase("session up, tables on disk")
+    (1 to WarmupPasses).foreach { p => pass(timed = false, -p); ctx.phase(s"warm-up pass $p done") }
     var heapMax = 0.0
     val jvm0 = JvmSnap.now()
     val t0 = System.nanoTime()
     var passes = 0
-    val passRates = mutable.ArrayBuffer.empty[Double]
     while (passes == 0 || System.nanoTime() - t0 < ctx.seconds * 1000000000L) {
-      val p0 = System.nanoTime()
       pass(timed = true, passes); passes += 1
-      passRates += Sample.size / ((System.nanoTime() - p0) / 1e9)
       heapMax = math.max(heapMax, JvmSnap.heapAfterGcMb())
     }
     val (gcS, cpuS) = JvmSnap.now().since(jvm0)
-
-    // results for the DuckDB comparison, outside the timed region
-    val out = ctx.work.resolve("registry")
-    Files.createDirectories(out)
-    Sample.foreach { n =>
-      queries(n)(spark, ctx.sfDir).write.parquet(out.resolve(n).toString)
-      Files.write(out.resolve(n + ".sql"), oracle(n).getBytes(UTF_8))
-    }
+    ctx.phase(s"$passes timed passes done")
+    // a pass made of each query's median wall over the timed passes, so a
+    // stall in one pass moves one sample of one query
+    val queryWalls = Sample.map(n => Stats.median(perQuery(n).toSeq))
     val e2e = Seq(
       ("setup_s", setupS, "s"),
-      ("throughput_per_s", Stats.median(passRates.toSeq), "1/s"),
-      ("latency_p50_s", Stats.median(latencies.toSeq), "s"),
-      ("latency_p90_s", Stats.pct(latencies.toSeq, 90), "s"))
-    val info = Seq("passes" -> passes.toDouble, "queries_per_pass" -> Sample.size.toDouble,
-      "latency_samples" -> latencies.size.toDouble)
+      ("throughput_per_s", Sample.size / queryWalls.sum, "1/s"),
+      ("latency_p50_s", Stats.median(latencies.toSeq), "s"))
+    val info = Seq("latency_p90_s" -> Stats.pct(latencies.toSeq, 90), "passes" -> passes.toDouble,
+      "queries_per_pass" -> Sample.size.toDouble, "latency_samples" -> latencies.size.toDouble)
     val layers =
       if (!ctx.trace) Nil
       else {

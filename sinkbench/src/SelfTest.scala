@@ -37,32 +37,40 @@ object SelfTest {
     expect("another seed gives other inputs", a != inputs(8, "gen-c"))
 
     // one real landing per wire; the checks pass on it
-    def landingOf(pb: Boolean): (String, String, Expect) = {
+    def landingOf(pb: Boolean): (String, String, Long, Expect) = {
       val recs = Gen.records(11, 20000, Backfill.Mix, pb, Gen.backlogStamp)
       val in = work.resolve(s"in-$pb")
       if (pb) Gen.writeProtobuf(in, recs, 4) else Gen.writeJson(in, recs, 4)
       val spec =
         if (pb) SourceFactory.SourceSpec.FileBinary(in.toString)
         else SourceFactory.SourceSpec.FileJson(in.toString)
-      val (landing, dead) = (work.resolve(s"landing-$pb").toString, work.resolve(s"dead-$pb").toString)
-      HfpStreamPipeline.start(spark, HfpStreamPipeline.Config(
+      // one drain, numbered 1, under its own landing and dead-letter roots
+      val (landing, dead) = (work.resolve(s"landings-$pb").toString, work.resolve(s"deads-$pb").toString)
+      val q = HfpStreamPipeline.start(spark, HfpStreamPipeline.Config(
         checkpointDir = work.resolve(s"cp-$pb").toString, availableNow = true,
-        deadLetterDir = Some(dead), source = Some(spec)),
-        new PartitionedVehiclesSink(landing)).awaitTermination()
-      (landing, dead, Expect.of(recs, pb, HfpModel.vehicleColumns ++
-        Seq(Checks.HourColumn, Checks.BucketColumn)))
+        deadLetterDir = Some(s"$dead/drain=1"), source = Some(spec)),
+        new PartitionedVehiclesSink(s"$landing/drain=1"))
+      q.awaitTermination()
+      (landing, dead, q.recentProgress.map(_.numInputRows).sum,
+        Expect.of(recs, pb, HfpModel.vehicleColumns ++ Seq(Checks.HourColumn, Checks.BucketColumn)))
     }
-    val (landing, dead, e) = landingOf(pb = false)
-    val clean = Checks.landing(spark, landing, dead, e)
+    val (landing, dead, in, e) = landingOf(pb = false)
+    def check(root: String, deadRoot: String, in: Long, e: Expect) =
+      Checks.landings(spark, root, deadRoot, Map(1 -> in), e)
+    val clean = check(landing, dead, in, e)
     expect(s"landing check passes on the JSON landing $clean", clean.isEmpty)
-    val (pbLanding, pbDead, pbE) = landingOf(pb = true)
-    val pbClean = Checks.landing(spark, pbLanding, pbDead, pbE)
+    val (pbLanding, pbDead, pbIn, pbE) = landingOf(pb = true)
+    val pbClean = check(pbLanding, pbDead, pbIn, pbE)
     expect(s"landing check passes on the protobuf landing $pbClean", pbClean.isEmpty)
+    // a drain that read one record more than it landed, dead-lettered or
+    // was planted to drop: one undecodable record too many
+    expect("landing check fails on a wrong undecodable count",
+      check(pbLanding, pbDead, pbIn + 1, pbE).nonEmpty)
     expect("the protobuf input plants dead and undecodable records", pbE.dead > 0 && pbE.undecodable > 0)
     expect("the JSON input plants dead records", e.dead > 0 && e.undecodable == 0)
 
     // damaged copies of the landing: each must fail the check
-    val real = Checks.readLanding(spark, landing)
+    val real = Checks.readPartitioned(spark, landing).drop(Checks.DrainColumn)
     val victim = real.agg(min("tsi")).head.getLong(0)
     val hit = col("tsi") === victim
     val otherHour = real.filter(!hit).select(Checks.HourColumn).distinct()
@@ -76,12 +84,12 @@ object SelfTest {
         real.withColumn(Checks.HourColumn, when(hit, lit(otherHour)).otherwise(col(Checks.HourColumn))))
     damages.zipWithIndex.foreach { case ((what, df), i) =>
       val path = work.resolve(s"damaged-$i").toString
-      df.write.partitionBy(Checks.HourColumn, Checks.BucketColumn).parquet(path)
-      val errs = Checks.landing(spark, path, dead, e)
+      df.write.partitionBy(Checks.HourColumn, Checks.BucketColumn).parquet(s"$path/drain=1")
+      val errs = check(path, dead, in, e)
       expect(s"landing check fails on $what: $errs", errs.nonEmpty)
     }
     expect("landing check fails on a lost dead-letter row",
-      Checks.landing(spark, landing, work.resolve("no-such-dir").toString, e).nonEmpty)
+      check(landing, work.resolve("no-such-dir").toString, in, e).nonEmpty)
 
     // the JDBC check: exactly once, against plain JDBC
     val url = "jdbc:derby:memory:selftest;create=true"
