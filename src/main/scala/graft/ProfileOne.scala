@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Optimization-round tooling: run ONE query end-to-end through the noop
@@ -16,22 +15,11 @@ object ProfileOne {
     val sfDir = args(0)
     val name = args(1)
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // extra confs for A/B experiments: "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROF_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extra = sys.env.get("SPARK_GRAFT_PROF_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("="))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = SparkEntry.localSession(defaultCpus = "32", extra)
     @volatile var jobStart = Map.empty[Int, (Long, String)]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =

@@ -7,22 +7,46 @@ import graft.queries.{AnalyticsQueries, AsofQueries, CurationQueries, DedupQueri
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  /** Session configs every entry point needs (see GraftSession). */
-  def applySessionDefaults(spark: SparkSession): Unit = {
+  /** Session configs every entry point needs. */
+  private val sessionConfs: Seq[(String, String)] = Seq(
     // null-on-error parse semantics (reference safeParse*, SURVEY §1.3)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    "spark.sql.ansi.enabled" -> "false",
     // the TIMESTAMP_NTZ branch of Tables.events (and every
     // unix_millis(cast(...)) pattern) interprets naive wall times in the
     // session timezone; the oracle's epoch_us treats the same stored
     // value as UTC, so a non-UTC driver session would shift every
     // event-time query. Pin it here, not just in Verify/Bench/specs.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
     // round-7-era events.parquet carried nanosecond timestamps; the
     // round-8 regeneration is microseconds. Tables.events normalizes
     // either to epoch-nanos long (this conf covers the nanos branch).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // native engine functions available from SQL text (graft_dot, …)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Apply [[sessionConfs]] and register the native engine functions
+    * available from SQL text (graft_dot, …) on an existing session. */
+  def applySessionDefaults(spark: SparkSession): Unit = {
+    sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.GraftFunctions.register(spark)
+  }
+
+  /** The local session of the `main` tools (Verify, Bench, ProfileOne,
+    * PlanDump): `local[SPARK_GRAFT_CPUS]` (else `defaultCpus`) with one
+    * shuffle partition per core, AQE on, no UI, WARN logging and the
+    * session defaults. `extra` confs apply last, so they can override. */
+  def localSession(defaultCpus: String,
+      extra: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = (sessionConfs ++ extra)
+      .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    applySessionDefaults(spark)
+    spark
   }
 
   /** Full registry: every implemented operator from SURVEY.md §2. */

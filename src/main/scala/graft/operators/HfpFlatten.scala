@@ -95,12 +95,4 @@ object HfpFlatten {
       invalidEnum(col("loc"), LocationQualityMethods)
     (vehicles.filter(!bad), vehicles.filter(bad))
   }
-
-  /**
-   * Schema-validation filter (reference O2, MessageProcessor.java:118,
-   * 125-127): drop rows whose schema tag is not the expected one. In the
-   * byte-stream ingest path the tag rides alongside the raw value.
-   */
-  def filterSchemaTag(df: DataFrame, tagColumn: String, expected: String): DataFrame =
-    df.filter(col(tagColumn) === lit(expected))
 }

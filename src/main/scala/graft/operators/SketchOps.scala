@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  * approx_count_distinct uses different registers, so this family is
  * spec-gated (union-vs-direct equivalence, bounded relative error vs
  * exact) rather than oracle-gated, like the other engine-specific
- * surfaces (BucketedJoinSpec, SpatialLayoutSpec).
+ * surfaces (BucketedJoinSpec).
  */
 object SketchOps {
 

@@ -435,8 +435,7 @@ object TemporalOps {
    * Scale shape: one keyed shuffle into collect_list, fold inside the
    * aggregation buffer, explode back out — state per key is its own
    * history (the operator's documented bound: keyed series of warehouse
-   * cardinality, ~10³ rows/key, not unbounded telemetry; for unbounded
-   * streams the streaming twin keeps ONE value of running state).
+   * cardinality, ~10³ rows/key, not unbounded telemetry).
    * Emits every input row with its smoothed value `e` and the step
    * deviation x − e_{i−1} (the control-chart signal; null for the seed
    * row, which has no forecast to deviate from).

@@ -40,8 +40,8 @@ object TextAnalysis {
       else array() end""")
 
   /** [[gramArray]] straight off a text column (tokenize + n-gram in one
-    * expression) — the public form stream twins and callers without a
-    * pre-tokenized frame use. */
+    * expression) — the public form callers without a pre-tokenized
+    * frame use. */
   def wordGrams(textColName: String, n: Int): Column =
     gramArray(s"split(lower($textColName), '\\\\s+')", n)
 
@@ -823,10 +823,7 @@ object TextAnalysis {
   /**
    * The gate derivation of [[perplexityGate]] factored onto its STATE
    * representation — per-source (score, count) histograms plus
-   * per-source document totals — so a stream-maintained state
-   * ([[graft.streaming.StreamCorpus.maintainFluencyState]]: additive
-   * count deltas landed per micro-batch) drives the identical manifest
-   * without ever re-reading standing documents. Everything the gate
+   * per-source document totals. Everything the gate
    * emits is a function of the counts: the quartile threshold (min s
    * with 4·cum ≥ n), kept/dropped tallies (Σcnt each side of thr) and
    * their means (Σs·cnt div Σcnt — decimal128, scores re-weight by

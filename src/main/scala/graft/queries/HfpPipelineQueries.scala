@@ -32,6 +32,8 @@ import graft.sources.{HfpProtobuf, HfpRawIngest}
  *        guards are a separate dead-letter split, HfpFlatten.splitInvalidEnums)
  *  - malformed payload JSON → dead-letter (required payload fields NULL),
  *        excluded from the good-side output on both engines
+ *  - v1 topic, and a topic too short to carry a version → dead-letter
+ *        (the v2 segment layout is the only one parsed), excluded likewise
  *
  * Timestamps are emitted as absolute epoch BIGINTs (received_at_ms,
  * tst_us) per the registry's cross-engine determinism rules; `long` and
@@ -40,7 +42,7 @@ import graft.sources.{HfpProtobuf, HfpRawIngest}
  */
 object HfpPipelineQueries {
 
-  /** One raw wire record: 18 topic segments (s2..s19), payload JSON, received_at millis. */
+  /** One raw wire record: topic segments (s2..s19 when complete), payload JSON, received_at millis. */
   private[graft] final case class RawFixture(segments: Seq[String], payload: String, receivedAt: Long) {
     def topic: String = "/" + segments.mkString("/")
   }
@@ -122,7 +124,7 @@ object HfpPipelineQueries {
       """{"VJOUT":{"desi":"19","dir":"1","oper":60,"veh":9,"tst":"2024-06-05T10:30:00.000Z","tsi":1717583400,"spd":4.0,"hdg":120,"lat":60.14,"long":24.98,"acc":0.1,"dl":15,"odo":2100.0,"drst":1,"oday":"2024-06-05","jrn":7,"line":3,"start":"10:30","loc":"NA","stop":1520703,"route":"19","occu":60}}""",
       1717583400777L)
     val f8 = RawFixture(
-      seg("v1", "journey", "ongoing", "xx", "bus", "0012", "00345", "600", "2",
+      seg("v2", "journey", "ongoing", "xx", "bus", "0012", "00345", "600", "2",
         "Lentoasema", "23:59", "1130113", "0", "60;24", "29", "80", "33"),
       """{"XX":{"desi":"600","dir":"2","oper":12,"veh":345,"tst":"2024-06-05T23:59:59.999Z","tsi":1717631999,"spd":7.7,"hdg":359,"lat":60.29,"long":24.8,"acc":-1.5,"dl":120,"odo":9999.9,"drst":0,"oday":"2024-06-05","jrn":64,"line":9,"start":"23:59","loc":"GPS","stop":1130113,"route":"600","occu":88}}""",
       1717631999000L)
@@ -131,7 +133,15 @@ object HfpPipelineQueries {
         "Nowhere", "00:00", "1", "0", "60;24", "00", "00", "00"),
       """this is not json{""",
       1717590000000L)
-    Seq(f1, f2, f3, f4, f5, f6, f7, f7, f8, deadLetter)
+    val v1Topic = RawFixture(
+      seg("v1", "journey", "ongoing", "vp", "bus", "0022", "00856", "2550", "2",
+        "Itakeskus(M)", "08:29", "1362148", "4", "60;24", "28", "65", "06"),
+      """{"VP":{"desi":"550","dir":"2","oper":22,"veh":856,"tst":"2024-06-05T08:00:02.000Z","tsi":1717574402}}""",
+      1717574402000L)
+    val shortTopic = RawFixture(Seq("hfp"),
+      """{"VP":{"desi":"550","dir":"2","oper":22,"veh":857,"tst":"2024-06-05T08:00:03.000Z","tsi":1717574403}}""",
+      1717574403000L)
+    Seq(f1, f2, f3, f4, f5, f6, f7, f7, f8, deadLetter, v1Topic, shortTopic)
   }
 
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
@@ -259,7 +269,8 @@ object HfpPipelineQueries {
           p_route AS route,
           CAST(try_cast(p_occu AS INT) AS SMALLINT) AS occu
         FROM fields
-        WHERE p_veh IS NOT NULL AND p_tst IS NOT NULL AND p_tsi IS NOT NULL"""
+        WHERE s3 = 'v2'
+          AND p_veh IS NOT NULL AND p_tst IS NOT NULL AND p_tsi IS NOT NULL"""
 
   private val pipelineOracle: String =
     s"$pipelineCtes $flatSelectSql ORDER BY received_at_ms, veh"

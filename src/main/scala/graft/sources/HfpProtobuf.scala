@@ -350,10 +350,11 @@ object HfpProtobuf {
   }
 
   /** Typed decode stage: binary wire records → envelopes. Narrow
-    * (mapPartitions, no shuffle); malformed records are dropped here and
-    * counted by the caller via the row-count delta — mirror of the
-    * reference's warn-and-skip on an unparsable message
-    * (MessageProcessor.java:121-127). */
+    * (mapPartitions, no shuffle); malformed records are dropped here,
+    * uncounted — the reference's warn-and-skip on an unparsable message
+    * (MessageProcessor.java:121-127) without its warning. No caller
+    * counts the drop yet; only the query's `numInputRows` still sees
+    * the records. */
   def decodeEnvelopes(wire: Dataset[Array[Byte]]): Dataset[HfpEnvelope] = {
     import wire.sparkSession.implicits._
     wire.mapPartitions(_.flatMap { b =>

@@ -150,15 +150,6 @@ object HfpRawIngest {
       parseTopic(col(topicCol), col(receivedAtCol)),
       parsePayload(col(payloadCol)))
 
-  /** Envelope rows must carry the expected schema version; mirror of the
-    * reference's schema-tag check (MessageProcessor.java:118). Default is
-    * v2 ONLY: [[parseTopic]] hardcodes the v2 segment layout (event_type
-    * at segment 6 — HfpModel.topicSchema marks it "v2 only"), so a v1
-    * topic passing the filter would parse with every later field shifted
-    * into the wrong column. */
-  def filterTopicVersion(env: DataFrame, versions: Seq[String] = Seq("v2")): DataFrame =
-    env.filter(col("topic.topic_version").isin(versions.map(lit): _*))
-
   /**
    * Dead-letter split on the payload's required-field contract: `veh`,
    * `tst`, `tsi` are NOT NULL in the reference schema (init.sql:49-51), and
@@ -168,6 +159,13 @@ object HfpRawIngest {
    * `tst` (QueueWriter.java:106); routing to a dead-letter frame keeps the
    * batch alive without silently shipping contract-violating rows.
    *
+   * The same split carries the reference's schema check (O2): a topic
+   * whose version segment is not `v2` — including a topic too short to
+   * have one — is dead-lettered, because [[parseTopic]] reads the v2
+   * segment layout only and would land a v1 topic with every later field
+   * shifted into the wrong column. `bad` is never NULL, so every row
+   * lands on exactly one side.
+   *
    * @return (good, deadLetter)
    */
   def splitInvalidPayload(env: DataFrame): (DataFrame, DataFrame) = {
@@ -175,7 +173,8 @@ object HfpRawIngest {
     // downstream and would ship a row the reference's NOT NULL column
     // rejects (the binary wire path throws on a MISSING trio at decode;
     // an explicitly-empty string arrives here)
-    val bad = col("payload.veh").isNull || col("payload.tst").isNull ||
+    val bad = !(col("topic.topic_version") <=> "v2") ||
+      col("payload.veh").isNull || col("payload.tst").isNull ||
       col("payload.tsi").isNull || trim(col("payload.tst")) === ""
     (env.filter(!bad), env.filter(bad))
   }

@@ -71,29 +71,6 @@ object AtRestLayout {
         pmod(xxhash64(col("unique_vehicle_id")), lit(buckets.toLong)).cast(IntegerType))
 }
 
-/**
- * Additive schema evolution over a long-lived landing — the scenario the
- * reference lived through when HFP v1 grew the v2 columns (`event_type`,
- * `loc`, `stop`, `route`, `occu`; run/init.sql:32,64-67 marks them
- * `-- v2`): files written before the migration simply LACK the columns.
- *
- * Parquet handles the additive case natively IF the reader asks for
- * schema merging — by default Spark plans from one footer and would
- * silently drop the new columns whenever the sampled file is v1-shaped.
- * [[read]] forces the union schema (per-file footer merge at planning
- * time, distributed and one-off); rows from pre-migration files surface
- * the missing columns as nulls, which downstream null-safe parsing (O8)
- * already tolerates. Columns may be ADDED, never retyped: parquet
- * refuses an int→string merge, matching the DDL's append-only history.
- */
-object EvolvedLanding {
-  /** The v2-added columns, i.e. what a v1-era landing file is missing. */
-  val V2Columns: Seq[String] = Seq("event_type", "loc", "stop", "route", "occu")
-
-  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-}
-
 /** Parquet landing with the reference's at-rest layout: 1-hour time
   * chunks × vehicle-hash space buckets (see [[AtRestLayout]]). */
 final class PartitionedVehiclesSink(path: String,

@@ -77,9 +77,11 @@ object HfpStreamPipeline {
    * so everything downstream (dead-letter split, flatten, sink) is
    * wire-format-agnostic. Undecodable protobuf records are dropped
    * inside the decode stage (the reference's warn-and-skip,
-   * MessageProcessor.java:121-127); decoded records missing required
-   * payload fields still route through the dead-letter split like any
-   * JSON-path row.
+   * MessageProcessor.java:121-127) and nothing counts them: they reach
+   * neither the sink nor the dead-letter output, and show only in the
+   * query's `numInputRows`. Decoded records missing required payload
+   * fields, or with a non-v2 topic, still route through the dead-letter
+   * split like any JSON-path row.
    */
   def toEnvelope(raw: DataFrame): DataFrame =
     if (SourceFactory.isBinaryWire(raw.schema)) {
@@ -91,7 +93,8 @@ object HfpStreamPipeline {
   /**
    * Wire the full query and start it. The foreachBatch body is the
    * reference's dump-cycle (MessageProcessor.java:72-99): split off
-   * contract-violating rows, flatten the rest, hand one batch to the sink.
+   * contract-violating rows and non-v2 topics, flatten the rest, hand one
+   * batch to the sink.
    */
   def start(spark: SparkSession, cfg: Config, sink: BatchSink): StreamingQuery = {
     require(cfg.checkpointDir.nonEmpty,

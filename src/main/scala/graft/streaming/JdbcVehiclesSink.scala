@@ -64,7 +64,9 @@ object PostgresHfpDialect extends SqlDialect {
  * where the scan's own splits shift with cores/`maxPartitionBytes`.
  * The ledger read-and-insert races only with the same (batch, partition)
  * replaying concurrently, which Structured Streaming's task re-attempt
- * rules already serialize through the rollback path.
+ * rules already serialize through the rollback path. The ledger table
+ * itself is created once per sink instance, on the driver, before the
+ * first write.
  *
  * The two flags COMPOSE: with `singleTransaction && idempotent` the batch
  * coalesces to one partition (stable partition id 0, trivially
@@ -83,7 +85,14 @@ final class JdbcVehiclesSink(
     connectionProps: Map[String, String] = Map.empty)
     extends BatchSink {
 
+  @volatile private var ledgerReady = false
+
   override def write(batch: DataFrame, batchId: Long): Unit = {
+    if (idempotent && !ledgerReady) {
+      val conn = JdbcVehiclesSink.connect(url, connectionProps)
+      try JdbcVehiclesSink.ensureLedger(conn, table) finally conn.close()
+      ledgerReady = true
+    }
     val df =
       if (singleTransaction) batch.coalesce(1)
       else if (idempotent)
@@ -95,9 +104,7 @@ final class JdbcVehiclesSink(
     val (u, props, tbl, idem) = (url, connectionProps, table, idempotent)
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.hasNext) {
-        val p = new Properties()
-        props.foreach { case (k, v) => p.setProperty(k, v) }
-        val conn = DriverManager.getConnection(u, p)
+        val conn = JdbcVehiclesSink.connect(u, props)
         val ledger =
           if (idem) Some(JdbcVehiclesSink.LedgerKey(
             tbl, batchId, org.apache.spark.TaskContext.getPartitionId()))
@@ -109,6 +116,13 @@ final class JdbcVehiclesSink(
 }
 
 object JdbcVehiclesSink {
+
+  /** A connection to `url` with `props` as its JDBC properties. */
+  def connect(url: String, props: Map[String, String]): Connection = {
+    val p = new Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    DriverManager.getConnection(url, p)
+  }
 
   /** INSERT statement with dialect placeholders, every identifier quoted. */
   def insertSql(table: String, schema: StructType, dialect: SqlDialect): String = {
@@ -123,8 +137,9 @@ object JdbcVehiclesSink {
   /** Commit-ledger table name for a sink table. */
   def ledgerTable(table: String): String = s"${table}_commits"
 
-  /** Create the ledger if absent (DDL is portable ANSI; an
-    * already-exists error from a concurrent creator is swallowed). */
+  /** Create the ledger if absent (DDL is portable ANSI; the
+    * already-exists error a restarted query or a concurrent creator
+    * meets is swallowed). */
   def ensureLedger(conn: Connection, table: String): Unit = {
     val stmt = conn.createStatement()
     try stmt.executeUpdate(
@@ -158,11 +173,11 @@ object JdbcVehiclesSink {
 
   /** One transaction for one partition's rows; rollback + rethrow on
     * error. With a ledger key: skip if this (batch, partition) already
-    * committed, else commit the ledger row atomically with the data. */
+    * committed, else commit the ledger row atomically with the data.
+    * The ledger table must exist ([[ensureLedger]]). */
   def writePartition(conn: Connection, sql: String, schema: StructType,
       rows: Iterator[Row], ledger: Option[LedgerKey] = None): Unit = {
     try {
-      ledger.foreach(k => ensureLedger(conn, k.table)) // own implicit txn
       conn.setAutoCommit(false)
       val alreadyCommitted = ledger.exists(k => ledgerHas(conn, k))
       if (alreadyCommitted) {

@@ -118,70 +118,6 @@ object StatefulOps {
       .drop("gap")
   }
 
-  final case class SeenDoc(docId: Long)
-
-  /**
-   * STREAMING ingest-time exact dedup — the streaming twin of the q22
-   * batch operator (TextDedup.exactDupGroups): one ValueState marker per
-   * key; the first row carrying a key is emitted (min id within the
-   * batch for determinism), every later copy is suppressed, across
-   * micro-batches through the checkpoint. Generic over the key and row
-   * types so the keep-list form ([[HashDedupProcessor]], rows ARE
-   * (hash, id)) and the full-row form (StreamCorpus, document bodies
-   * ride through while state holds only the marker) share ONE
-   * state machine — a TTL or re-admission change lands in both.
-   *
-   * The state is TTL'd (`TTLConfig`, processing-time): a corpus stream's
-   * hash space is UNBOUNDED — unlike the closed vehicle fleet of
-   * [[TripProcessor]] — so unexpiring markers would grow state forever.
-   * The TTL is the dedup horizon: re-occurrences beyond it re-admit,
-   * which is the standard at-scale contract (exact within the horizon,
-   * handed to the batch dedup beyond it).
-   */
-  class KeepFirstProcessor[K, R](id: R => Long, ttlMs: Long)
-      extends StatefulProcessor[K, R, R] {
-    @transient private var seen: ValueState[SeenDoc] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[SeenDoc]("seen",
-        Encoders.product[SeenDoc],
-        if (ttlMs > 0) TTLConfig(java.time.Duration.ofMillis(ttlMs))
-        else TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[R],
-        timers: TimerValues): Iterator[R] = {
-      if (seen.exists()) Iterator.empty
-      else {
-        // explicit found flag, not a MaxValue sentinel: an id that IS
-        // Long.MaxValue must still be kept and marked seen
-        var found = false
-        var best: R = null.asInstanceOf[R]
-        var bestId = 0L
-        rows.foreach { r =>
-          val i = id(r)
-          if (!found || i < bestId) { found = true; bestId = i; best = r }
-        }
-        if (!found) Iterator.empty
-        else { seen.update(SeenDoc(bestId)); Iterator.single(best) }
-      }
-    }
-  }
-
-  /** The (hash, id) keep-list projection of [[KeepFirstProcessor]]. */
-  class HashDedupProcessor(ttlMs: Long)
-      extends KeepFirstProcessor[String, (String, Long)](_._2, ttlMs)
-
-  /** [[HashDedupProcessor]] over a (hashCol, idCol) frame; `ttlMs <= 0`
-    * keeps markers forever (closed hash spaces only). */
-  def streamDedupByHash(docs: DataFrame, hashCol: String, idCol: String,
-      ttlMs: Long): Dataset[(String, Long)] = {
-    import docs.sparkSession.implicits._
-    docs.select(col(hashCol), col(idCol)).as[(String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new HashDedupProcessor(ttlMs),
-        TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
   final case class Heartbeat(lastTsMs: Long)
   final case class OfflineAlert(unique_vehicle_id: String, last_seen_ms: Long)
 
@@ -325,127 +261,6 @@ object StatefulOps {
         TimeMode.None(), OutputMode.Append())
   }
 
-  final case class LedgerIn(k: Long, t: Long, tie: Long, x: Long)
-  final case class LedgerOut(k: Long, t: Long, tie: Long, x: Long, v: Long)
-  final case class RunVal(v: Long)
-
-  /**
-   * Streaming twin of the batch running-state recurrences
-   * (`TemporalOps.ewmaSmooth`, `TemporalOps.clampedBalance`): where the
-   * batch operators hold a key's whole history (closed form or fold),
-   * the stream keeps exactly ONE long of state per key — the current
-   * recurrence value — so unbounded feeds run in memory ∝ distinct
-   * keys. Rows sort by (t, tie) inside each micro-batch; across batches
-   * the checkpointed state continues the walk, so a key's series split
-   * over any batch boundary produces bit-identical values to the batch
-   * operator on the concatenated input (the spec's equivalence claim).
-   * Requires event-time-ordered batch arrival, same as
-   * [[assignTrips]].
-   */
-  class RunningRecurrenceProcessor(step: (Option[Long], Long) => Long)
-      extends StatefulProcessor[Long, LedgerIn, LedgerOut] {
-    @transient private var st: ValueState[RunVal] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RunVal]("run",
-        Encoders.product[RunVal], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[LedgerIn],
-        timers: TimerValues): Iterator[LedgerOut] = {
-      val sorted = rows.toArray.sortBy(r => (r.t, r.tie))
-      var prev: Option[Long] = if (st.exists()) Some(st.get().v) else None
-      val out = sorted.map { r =>
-        val v = step(prev, r.x)
-        prev = Some(v)
-        LedgerOut(r.k, r.t, r.tie, r.x, v)
-      }
-      if (sorted.nonEmpty) st.update(RunVal(prev.get))
-      out.iterator
-    }
-  }
-
-  /** e₁ = x₁, eᵢ = (eᵢ₋₁ + xᵢ) div 2 — TemporalOps.ewmaSmooth's lattice
-    * (Scala `/` on Long truncates exactly like Spark `div`). */
-  val EwmaStep: (Option[Long], Long) => Long =
-    (prev, x) => prev.map(e => (e + x) / 2).getOrElse(x)
-
-  /** bᵢ = max(0, bᵢ₋₁ + xᵢ) — TemporalOps.clampedBalance's recurrence,
-    * seeded at 0. */
-  val ClampStep: (Option[Long], Long) => Long =
-    (prev, x) => math.max(0L, prev.getOrElse(0L) + x)
-
-  /** [[RunningRecurrenceProcessor]] over a (key, t, tie, x) frame. */
-  def runningRecurrenceStream(rows: DataFrame,
-      step: (Option[Long], Long) => Long): Dataset[LedgerOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("tie"), col("x"))
-      .as[LedgerIn]
-      .groupByKey(_.k)
-      .transformWithState(new RunningRecurrenceProcessor(step),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class FunnelEvt(u: Long, t: Long, et: String)
-  final case class FunnelTimes(ts: List[Long])
-  final case class FunnelAdvance(u: Long, stage: Long, t: Long)
-
-  /**
-   * Streaming twin of `TemporalOps.funnelWithin` — the per-user stage
-   * machine kept LIVE: one fixed-size stage-time vector of state per
-   * user where batch re-derives the whole funnel, emitting an advance
-   * row the moment a user enters a stage (the activation-alerting shape:
-   * "user converted NOW", not at tonight's batch). Greedy-earliest is
-   * what makes the one-pass machine correct: processing events in time
-   * order, the FIRST event qualifying for stage k is exactly batch's
-   * min, so stream ≡ batch by construction.
-   *
-   * Same in-order contract as [[RunningRecurrenceProcessor]]: events
-   * arrive time-ordered per key across micro-batches (rows within one
-   * batch are sorted here; cross-batch order is the upstream contract —
-   * watermark + sort or an ordered source). State is stages.size longs
-   * per user, bounded regardless of feed length.
-   */
-  class FunnelProcessor(stages: Seq[String], gap: Long)
-      extends StatefulProcessor[Long, FunnelEvt, FunnelAdvance] {
-    @transient private var st: ValueState[FunnelTimes] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelTimes]("funnel",
-        Encoders.product[FunnelTimes], TTLConfig.NONE)
-
-    override def handleInputRows(u: Long, rows: Iterator[FunnelEvt],
-        timers: TimerValues): Iterator[FunnelAdvance] = {
-      val sorted = rows.toArray.sortBy(_.t)
-      val times =
-        if (st.exists()) st.get().ts.toArray
-        else Array.fill(stages.size)(Long.MinValue)
-      val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
-      sorted.foreach { r =>
-        val i = stages.indexOf(r.et)
-        if (i == 0 && times(0) == Long.MinValue) {
-          times(0) = r.t; out += FunnelAdvance(u, 1L, r.t)
-        } else if (i > 0 && times(i) == Long.MinValue &&
-            times(i - 1) != Long.MinValue &&
-            r.t > times(i - 1) && r.t <= times(i - 1) + gap) {
-          times(i) = r.t; out += FunnelAdvance(u, (i + 1).toLong, r.t)
-        }
-      }
-      if (sorted.nonEmpty) st.update(FunnelTimes(times.toList))
-      out.iterator
-    }
-  }
-
-  /** [[FunnelProcessor]] over a (u, t, et) frame. */
-  def funnelStream(rows: DataFrame, stages: Seq[String],
-      gap: Long): Dataset[FunnelAdvance] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("u"), col("t"), col("et"))
-      .as[FunnelEvt]
-      .groupByKey(_.u)
-      .transformWithState(new FunnelProcessor(stages, gap),
-        TimeMode.None(), OutputMode.Append())
-  }
-
   final case class FixIn(k: Long, t: Long, tie: Long, x: Long, y: Long)
   final case class DwellRun(startT: Long, lastT: Long, lastX: Long,
       lastY: Long, n: Long)
@@ -464,9 +279,9 @@ object StatefulOps {
    * ≡ batch episodes over CLOSED runs; the spec's fixtures close every
    * qualifying run and assert bit-equality against
    * `MotionOps.dwellEpisodes` with series split across checkpointed
-   * micro-batches. Same in-order-per-key contract as
-   * [[RunningRecurrenceProcessor]]; state is 5 longs per vehicle
-   * regardless of feed length.
+   * micro-batches. Rows sort by (t, tie) inside each micro-batch and
+   * batches must arrive in event-time order, same as [[assignTrips]];
+   * state is 5 longs per vehicle regardless of feed length.
    */
   class DwellProcessor(maxStepMm: Long, minFixes: Int)
       extends StatefulProcessor[Long, FixIn, DwellEpisode] {
@@ -508,1107 +323,6 @@ object StatefulOps {
       .as[FixIn]
       .groupByKey(_.k)
       .transformWithState(new DwellProcessor(maxStepMm, minFixes),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class HitIn(k: Long, t: Long, tie: Long, item: String)
-  final case class HitOut(k: Long, item: String, count: Long, err: Long)
-  final case class SsState(entries: List[(String, Long, Long)])
-
-  /** The flush sentinel: a row whose item equals this string makes the
-    * processor emit its current summary instead of counting. */
-  val SsFlushItem = "\u0000flush"
-
-  /**
-   * Streaming SpaceSaving heavy hitters (Metwally 2005) — the frequent-
-   * items summary for an unbounded feed in EXACTLY m counters per key,
-   * where any exact count needs unbounded state: top-selling items,
-   * hottest routes, dominant error codes, live. The classic guarantees
-   * — every item with true count > N/m is tracked; for every tracked
-   * item, count − err ≤ true ≤ count — hold for ANY arrival order; the
-   * exact counter values additionally depend on it, so this engine
-   * pins the order deterministically (rows sort by (t, tie) per
-   * micro-batch; cross-batch order is the same upstream contract as
-   * every stateful op here), making the summary replay-identical, not
-   * merely guarantee-identical.
-   *
-   * Eviction: an untracked arrival replaces the minimum-count entry
-   * (ties by item ascending — a TOTAL order, so eviction is
-   * deterministic), inheriting its count as the new entry's error. A
-   * [[SsFlushItem]] sentinel row emits the summary (count desc, item
-   * asc) — the consumer decides the cadence by injecting sentinels;
-   * per-row emission would flood the sink with m rows per input.
-   */
-  class SpaceSavingProcessor(m: Int)
-      extends StatefulProcessor[Long, HitIn, HitOut] {
-    @transient private var st: ValueState[SsState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SsState]("ss",
-        Encoders.product[SsState], TTLConfig.NONE)
-
-    override def handleInputRows(k: Long, rows: Iterator[HitIn],
-        timers: TimerValues): Iterator[HitOut] = {
-      val sorted = rows.toArray.sortBy(r => (r.t, r.tie))
-      var entries: Map[String, (Long, Long)] =
-        if (st.exists()) st.get().entries.map(e => e._1 -> (e._2, e._3)).toMap
-        else Map.empty
-      val out = scala.collection.mutable.ArrayBuffer[HitOut]()
-      sorted.foreach { r =>
-        if (r.item == SsFlushItem) {
-          out ++= entries.toSeq
-            .map { case (i, (c, e)) => HitOut(k, i, c, e) }
-            .sortBy(h => (-h.count, h.item))
-        } else entries.get(r.item) match {
-          case Some((c, e)) => entries += r.item -> (c + 1, e)
-          case None if entries.size < m =>
-            entries += r.item -> (1L, 0L)
-          case None =>
-            val (evict, (minC, _)) =
-              entries.toSeq.minBy { case (i, (c, _)) => (c, i) }
-            entries = entries - evict + (r.item -> (minC + 1, minC))
-        }
-      }
-      if (sorted.exists(_.item != SsFlushItem))
-        st.update(SsState(entries.toList.map(e => (e._1, e._2._1, e._2._2))))
-      out.iterator
-    }
-  }
-
-  /** [[SpaceSavingProcessor]] over a (k, t, tie, item) frame. */
-  def heavyHittersStream(rows: DataFrame, m: Int): Dataset[HitOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("tie"), col("item"))
-      .as[HitIn]
-      .groupByKey(_.k)
-      .transformWithState(new SpaceSavingProcessor(m),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class QIn(k: Long, t: Long, tie: Long, v: Long)
-  final case class QOut(k: Long, q: Long, est: Long, n: Long)
-  final case class HistState(counts: List[Long])
-
-  /** The flush sentinel: a row with this value makes the processor
-    * emit its current quantile estimates instead of counting. */
-  val QFlushValue: Long = Long.MinValue
-
-  /**
-   * Streaming equi-width-histogram quantiles — the live p50/p90 of an
-   * unbounded per-key feed in `nBuckets` longs of state (exact
-   * quantiles need the whole history; q129's IVM quantile holds the
-   * SAME histogram-state answer for incremental batch — this is its
-   * stream half, and the two agree bucket-for-bucket by construction).
-   * Values clamp into [lo, lo + nBuckets·width); the estimate for
-   * percentile q is the LOWER EDGE of the first bucket where
-   * 100·cumulative ≥ q·N — pure integer arithmetic, so unlike a
-   * sampled sketch the answer is identical for any arrival order or
-   * batch split (no per-batch sort even needed; counts commute). A
-   * [[QFlushValue]] sentinel row emits the current estimates.
-   */
-  class HistogramQuantileProcessor(lo: Long, width: Long, nBuckets: Int,
-      percentiles: Seq[Int])
-      extends StatefulProcessor[Long, QIn, QOut] {
-    @transient private var st: ValueState[HistState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[HistState]("hist",
-        Encoders.product[HistState], TTLConfig.NONE)
-
-    override def handleInputRows(k: Long, rows: Iterator[QIn],
-        timers: TimerValues): Iterator[QOut] = {
-      val counts: Array[Long] =
-        if (st.exists()) st.get().counts.toArray
-        else Array.fill(nBuckets)(0L)
-      val out = scala.collection.mutable.ArrayBuffer[QOut]()
-      var dirty = false
-      // counts commute, but a flush row must observe exactly the rows
-      // before it — the (t, tie) sort pins which prefix that is
-      rows.toArray.sortBy(r => (r.t, r.tie)).foreach { r =>
-        if (r.v == QFlushValue) {
-          val n = counts.sum
-          percentiles.foreach { q =>
-            var cum = 0L; var b = 0; var est = lo
-            if (n > 0) {
-              while (b < nBuckets && cum * 100 < n * q) {
-                cum += counts(b); b += 1
-              }
-              est = lo + (b - 1).max(0) * width
-            }
-            out += QOut(k, q.toLong, est, n)
-          }
-        } else {
-          val b = (((r.v - lo) / width).max(0L)
-            .min(nBuckets - 1L)).toInt
-          counts(b) += 1
-          dirty = true
-        }
-      }
-      if (dirty) st.update(HistState(counts.toList))
-      out.iterator
-    }
-  }
-
-  /** [[HistogramQuantileProcessor]] over a (k, t, tie, v) frame. */
-  def quantileStream(rows: DataFrame, lo: Long, width: Long,
-      nBuckets: Int, percentiles: Seq[Int]): Dataset[QOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("tie"), col("v"))
-      .as[QIn]
-      .groupByKey(_.k)
-      .transformWithState(new HistogramQuantileProcessor(lo, width,
-        nBuckets, percentiles), TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class AesIn(k: Long, id: Long, w: Long)
-  final case class AesOut(k: Long, rk: Long, id: Long, w: Long,
-    aesKey: Long)
-  final case class AesState(entries: List[(Long, Long, Long)])
-
-  /** Flush sentinel id for [[AesSampleProcessor]] — an id no real row
-    * carries; a row with it emits the current sample. */
-  val AesFlushId: Long = Long.MinValue
-
-  /**
-   * Streaming A-ES weighted reservoir (q180's stream twin) — k items
-   * per stratum with inclusion odds ∝ weight over an UNBOUNDED feed,
-   * in exactly k state entries per key: the streaming half of
-   * Efraimidis–Spirakis, whose whole point is that "keep the k
-   * smallest keys" IS a weighted without-replacement sample. Keys come
-   * from the identical deterministic lattice as the batch operator
-   * (md5 → [[graft.functions.FixedLog.log2q20]] → Q36 ratio), so
-   * stream and batch agree BIT-FOR-BIT on the same rows — and unlike
-   * every (t, tie)-ordered twin here, the sample is ARRIVAL-ORDER
-   * INDEPENDENT by construction (min-k of a set), so no ordering
-   * contract is even needed; micro-batch splits and replays cannot
-   * move it. Rows with w ≤ 0 are dropped as in batch. An [[AesFlushId]]
-   * sentinel row emits the ranked sample (aesKey asc, id asc).
-   */
-  class AesSampleProcessor(k: Int)
-      extends StatefulProcessor[Long, AesIn, AesOut] {
-    @transient private var st: ValueState[AesState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AesState]("aes",
-        Encoders.product[AesState], TTLConfig.NONE)
-
-    private def aesKey(id: Long, w: Long): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val m = java.lang.Long.parseLong(hex.substring(0, 15), 16) + 1
-      ((60L << 20) - graft.functions.FixedLog.log2q20(m)) * (1L << 36) / w
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[AesIn],
-        timers: TimerValues): Iterator[AesOut] = {
-      var entries: List[(Long, Long, Long)] =
-        if (st.exists()) st.get().entries else Nil
-      val out = scala.collection.mutable.ArrayBuffer[AesOut]()
-      var dirty = false
-      rows.foreach { r =>
-        if (r.id == AesFlushId) {
-          out ++= entries.sortBy(e => (e._1, e._2)).zipWithIndex.map {
-            case ((ak, id, w), i) => AesOut(key, i + 1L, id, w, ak)
-          }
-        } else if (r.w > 0) {
-          entries = ((aesKey(r.id, r.w), r.id, r.w) :: entries)
-            .sortBy(e => (e._1, e._2)).take(k)
-          dirty = true
-        }
-      }
-      if (dirty) st.update(AesState(entries))
-      out.iterator
-    }
-  }
-
-  /** [[AesSampleProcessor]] over a (k, id, w) frame. */
-  def aesSampleStream(rows: DataFrame, k: Int): Dataset[AesOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("id"), col("w"))
-      .as[AesIn]
-      .groupByKey(_.k)
-      .transformWithState(new AesSampleProcessor(k),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class JsIn(cell: String, slice: String, item: String)
-  final case class JsOut(cell: String, nA: Long, nB: Long, nKeys: Long,
-      jsQ20: Option[Long])
-  final case class JsState(entries: List[(String, Long, Long)])
-
-  /** Flush sentinel slice: a row with this slice value makes the
-    * processor emit the cell's current divergence instead of counting. */
-  val JsFlushSlice: String = "!flush"
-
-  /**
-   * Streaming twin of the Jensen–Shannon drift readout (q198,
-   * [[graft.operators.StatsOps.jsDivergence]]) — the live "is this
-   * feed's distribution drifting from its reference slice" monitor.
-   * State per cell is the (key → (p, q)) count map — bounded by the
-   * key vocabulary, NOT the stream length (callers bin/hash open
-   * domains; the q129 histogram discipline) — and counts commute, so
-   * the emitted statistic is identical for any arrival order or batch
-   * split. The divergence itself replays the SAME [[FixedLog.log2q20]]
-   * lattice and the same truncate-toward-zero divisions as the batch
-   * operator (BigInt `/` and decimal `div` share that contract), so a
-   * flush after N batches is bit-equal to the batch operator over the
-   * union of those batches — pinned by `StreamJsDriftSpec` across
-   * checkpointed restarts. Count rows in the flush batch apply BEFORE
-   * the emission (set semantics, not order semantics).
-   */
-  class JsDriftProcessor extends StatefulProcessor[String, JsIn, JsOut] {
-    @transient private var st: ValueState[JsState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[JsState]("js",
-        Encoders.product[JsState], TTLConfig.NONE)
-
-    override def handleInputRows(cell: String, rows: Iterator[JsIn],
-        timers: TimerValues): Iterator[JsOut] = {
-      var m: Map[String, (Long, Long)] =
-        if (st.exists()) st.get().entries.map(e => e._1 -> (e._2, e._3)).toMap
-        else Map.empty
-      var counted = false
-      var flush = false
-      rows.foreach { r =>
-        if (r.slice == JsFlushSlice) flush = true
-        else {
-          counted = true
-          val (p, q) = m.getOrElse(r.item, (0L, 0L))
-          m += r.item -> (if (r.slice == "A") (p + 1, q) else (p, q + 1))
-        }
-      }
-      if (counted)
-        st.update(JsState(m.toList.map(e => (e._1, e._2._1, e._2._2))))
-      if (!flush) Iterator.empty
-      else {
-        val tp = BigInt(m.valuesIterator.map(_._1).sum)
-        val tq = BigInt(m.valuesIterator.map(_._2).sum)
-        val js = if (tp > 0 && tq > 0) {
-          var sa = BigInt(0); var sb = BigInt(0)
-          m.valuesIterator.foreach { case (pl, ql) =>
-            val p = BigInt(pl); val q = BigInt(ql)
-            val mix = p * tq + q * tp
-            if (p > 0)
-              sa += p * (graft.functions.FixedLog.log2q20(
-                (2 * p * tq).toLong) -
-                graft.functions.FixedLog.log2q20(mix.toLong))
-            if (q > 0)
-              sb += q * (graft.functions.FixedLog.log2q20(
-                (2 * q * tp).toLong) -
-                graft.functions.FixedLog.log2q20(mix.toLong))
-          }
-          Some((sa / (2 * tp) + sb / (2 * tq)).toLong)
-        } else None
-        Iterator.single(
-          JsOut(cell, tp.toLong, tq.toLong, m.size.toLong, js))
-      }
-    }
-  }
-
-  /** [[JsDriftProcessor]] over a (cell, slice, item) frame. */
-  def jsDriftStream(rows: DataFrame): Dataset[JsOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("cell"), col("slice"), col("item"))
-      .as[JsIn]
-      .groupByKey(_.cell)
-      .transformWithState(new JsDriftProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class KsIn(cell: String, slice: String, v: Long)
-  final case class KsOut(cell: String, nA: Long, nB: Long,
-      dPpm: Option[Long], vAtMax: Option[Long])
-
-  /** Flush sentinel slice for [[KsDriftProcessor]]. */
-  val KsFlushSlice: String = "!flush"
-
-  /**
-   * Streaming twin of the KS two-sample statistic (q197,
-   * [[graft.operators.StatsOps.ksTest]]) — the live "has this feed's
-   * DISTRIBUTION shifted from the reference" monitor, sharing the
-   * [[JsDriftProcessor]] state discipline: per-cell (value → (a, b))
-   * count maps bounded by the binned value domain, commutative counts
-   * (any arrival order / batch split yields the same emission), and
-   * the exact cross-multiplied integer lattice of the batch operator
-   * (BigInt replay of |cumA·n_B − cumB·n_A|, max-gap with the
-   * lowest-value tie-break) — so a flush is bit-equal to batch
-   * `ksTest` over the union of batches, pinned by `StreamKsDriftSpec`
-   * across checkpointed restarts.
-   */
-  class KsDriftProcessor extends StatefulProcessor[String, KsIn, KsOut] {
-    @transient private var st: ValueState[JsState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[JsState]("ks",
-        Encoders.product[JsState], TTLConfig.NONE)
-
-    override def handleInputRows(cell: String, rows: Iterator[KsIn],
-        timers: TimerValues): Iterator[KsOut] = {
-      var m: Map[Long, (Long, Long)] =
-        if (st.exists())
-          st.get().entries.map(e => e._1.toLong -> (e._2, e._3)).toMap
-        else Map.empty
-      var counted = false
-      var flush = false
-      rows.foreach { r =>
-        if (r.slice == KsFlushSlice) flush = true
-        else {
-          counted = true
-          val (a, b) = m.getOrElse(r.v, (0L, 0L))
-          m += r.v -> (if (r.slice == "A") (a + 1, b) else (a, b + 1))
-        }
-      }
-      if (counted)
-        st.update(JsState(m.toList.map(e => (e._1.toString, e._2._1,
-          e._2._2))))
-      if (!flush) Iterator.empty
-      else {
-        val nA = BigInt(m.valuesIterator.map(_._1).sum)
-        val nB = BigInt(m.valuesIterator.map(_._2).sum)
-        if (nA > 0 && nB > 0) {
-          var cumA = BigInt(0); var cumB = BigInt(0)
-          var best = BigInt(-1); var bestV = 0L
-          m.keys.toSeq.sorted.foreach { v =>
-            val (a, b) = m(v)
-            cumA += a; cumB += b
-            val gap = (cumA * nB - cumB * nA).abs
-            if (gap > best) { best = gap; bestV = v }
-          }
-          Iterator.single(KsOut(cell, nA.toLong, nB.toLong,
-            Some(((best * 1000000) / (nA * nB)).toLong), Some(bestV)))
-        } else
-          Iterator.single(KsOut(cell, nA.toLong, nB.toLong, None, None))
-      }
-    }
-  }
-
-  /** [[KsDriftProcessor]] over a (cell, slice, v) frame. */
-  def ksDriftStream(rows: DataFrame): Dataset[KsOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("cell"), col("slice"), col("v"))
-      .as[KsIn]
-      .groupByKey(_.cell)
-      .transformWithState(new KsDriftProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class AucIn(cell: String, t: Long, tie: Long, s: Long,
-    y: Long)
-  final case class AucOut(cell: String, n_pos: Long, n_neg: Long,
-    auc_ppm: Option[Long])
-  final case class AucState(counts: List[(Long, Long, Long)])
-
-  /** Flush sentinel score for [[AucProcessor]]. */
-  val AucFlushScore: Long = Long.MinValue
-
-  /**
-   * Streaming exact AUC-ROC (q209's stream twin) — the live ranking
-   * quality of a scored event feed, in score-lattice-bounded state per
-   * cell: counts per distinct score commute across micro-batches, and
-   * a flush replays the batch operator's EXACT midrank identity
-   * (2R₁ = Σ c₁(2·cumBefore + c + 1), auc_ppm =
-   * ⌊10⁶(2R₁ − n₁(n₁+1))/(2n₁n₀)⌋ in BigInt) over the (t, tie)-sorted
-   * prefix ENDING AT the sentinel — emitted inline during the sorted
-   * iteration (the GramNoveltyProcessor pattern), so count rows ordered
-   * after a sentinel in the same micro-batch update state but are
-   * excluded from that sentinel's readout, and stream and batch agree
-   * bit-for-bit on the same prefix — the q129/q198 twin discipline.
-   * One-class prefixes emit None, never a division error. State is
-   * |score lattice| triples per cell (the batch operator's own window
-   * frame bound), independent of stream length.
-   */
-  class AucProcessor extends StatefulProcessor[String, AucIn, AucOut] {
-    @transient private var st: ValueState[AucState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AucState]("auc",
-        Encoders.product[AucState], TTLConfig.NONE)
-
-    /** The exact midrank AUC of the current counts snapshot. */
-    private def readout(cell: String,
-        m: scala.collection.Map[Long, (Long, Long)]): AucOut = {
-      val n1 = BigInt(m.valuesIterator.map(_._1).sum)
-      val n0 = BigInt(m.valuesIterator.map(_._2).sum)
-      if (n1 > 0 && n0 > 0) {
-        var cum = BigInt(0); var r2 = BigInt(0)
-        m.keys.toSeq.sorted.foreach { s =>
-          val (a, b) = m(s)
-          r2 += BigInt(a) * (2 * cum + a + b + 1)
-          cum += BigInt(a) + b
-        }
-        // r2 already holds the DOUBLED rank sum 2R1
-        val auc = (BigInt(1000000) * (r2 - n1 * (n1 + 1)) /
-          (2 * n1 * n0)).toLong
-        AucOut(cell, n1.toLong, n0.toLong, Some(auc))
-      } else
-        AucOut(cell, n1.toLong, n0.toLong, None)
-    }
-
-    override def handleInputRows(cell: String, rows: Iterator[AucIn],
-        timers: TimerValues): Iterator[AucOut] = {
-      val m = scala.collection.mutable.Map[Long, (Long, Long)]()
-      if (st.exists()) st.get().counts.foreach { case (s, a, b) =>
-        m += s -> ((a, b))
-      }
-      val out = scala.collection.mutable.ArrayBuffer[AucOut]()
-      var counted = false
-      // counts commute; the (t, tie) sort pins which prefix each flush
-      // sees, and the readout fires AT the sentinel position
-      rows.toArray.sortBy(r => (r.t, r.tie)).foreach { r =>
-        if (r.s == AucFlushScore) out += readout(cell, m)
-        else {
-          counted = true
-          val (a, b) = m.getOrElse(r.s, (0L, 0L))
-          m += r.s -> (if (r.y == 1L) (a + 1, b) else (a, b + 1))
-        }
-      }
-      if (counted)
-        st.update(AucState(m.toList.map(e => (e._1, e._2._1, e._2._2))))
-      out.iterator
-    }
-  }
-
-  /** [[AucProcessor]] over a (cell, t, tie, s, y) frame. */
-  def aucStream(rows: DataFrame): Dataset[AucOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("cell"), col("t"), col("tie"), col("s"), col("y"))
-      .as[AucIn]
-      .groupByKey(_.cell)
-      .transformWithState(new AucProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class NovIn(src: String, t: Long, tie: Long, gh: Long,
-    nov: Long)
-  final case class NovOut(src: String, distinct_grams: Long,
-    novel_distinct: Long, occurrences: Long, novel_occurrences: Long,
-    nov_distinct_ppm: Option[Long], nov_occ_ppm: Option[Long])
-  final case class NovCounts(dg: Long, nd: Long, occ: Long, nocc: Long)
-
-  /** Flush sentinel gram hash for [[GramNoveltyProcessor]]. */
-  val NovFlushHash: Long = Long.MinValue
-
-  /**
-   * Streaming cross-source novelty monitor (q214's stream twin) — the
-   * live "is this feed still adding anything?" readout at ingest: the
-   * caller stream-static joins incoming gram hashes against the LANDED
-   * reference gram set (the q214 join, with the static side read from
-   * the index), and this processor accumulates per-source distinct and
-   * occurrence novelty across micro-batches. Distinct-gram membership
-   * lives in a [[MapState]] — per-gram point lookups against RocksDB,
-   * never a rebuilt set, so state cost is vocabulary-sized (the batch
-   * operator's own ref-side bound) and per-row work is O(1). A flush
-   * row emits the same six counters the batch operator lands, agreeing
-   * bit-for-bit on the same prefix.
-   */
-  class GramNoveltyProcessor
-      extends StatefulProcessor[String, NovIn, NovOut] {
-    @transient private var seen:
-      org.apache.spark.sql.streaming.MapState[Long, Boolean] = _
-    @transient private var cnt: ValueState[NovCounts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle.getMapState[Long, Boolean]("seen",
-        Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
-      cnt = getHandle.getValueState[NovCounts]("cnt",
-        Encoders.product[NovCounts], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(src: String, rows: Iterator[NovIn],
-        timers: TimerValues): Iterator[NovOut] = {
-      var c = if (cnt.exists()) cnt.get() else NovCounts(0L, 0L, 0L, 0L)
-      val out = scala.collection.mutable.ArrayBuffer[NovOut]()
-      rows.toArray.sortBy(r => (r.t, r.tie)).foreach { r =>
-        if (r.gh == NovFlushHash)
-          out += NovOut(src, c.dg, c.nd, c.occ, c.nocc,
-            if (c.dg > 0) Some(1000000L * c.nd / c.dg) else None,
-            if (c.occ > 0) Some(1000000L * c.nocc / c.occ) else None)
-        else {
-          if (!seen.containsKey(r.gh)) {
-            seen.updateValue(r.gh, true)
-            c = c.copy(dg = c.dg + 1, nd = c.nd + r.nov)
-          }
-          c = c.copy(occ = c.occ + 1, nocc = c.nocc + r.nov)
-        }
-      }
-      cnt.update(c)
-      out.iterator
-    }
-  }
-
-  /** [[GramNoveltyProcessor]] over a (src, t, tie, gh, nov) frame. */
-  def gramNoveltyStream(rows: DataFrame): Dataset[NovOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("src"), col("t"), col("tie"), col("gh"), col("nov"))
-      .as[NovIn]
-      .groupByKey(_.src)
-      .transformWithState(new GramNoveltyProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class SemIn(cell: Long, t: Long, tie: Long, vid: Long,
-    v: Array[Double], nrm: Double)
-  final case class SemOut(cell: Long, vid: Long, keep: Int, capped: Int,
-    matched: Option[Long])
-  final case class SemEx(vid: Long, v: Array[Double], nrm: Double)
-  final case class SemState(ex: List[SemEx])
-
-  /**
-   * Streaming semantic deduplication (q189's stream twin — the last
-   * heavy dedup family member to get one): ingest-time embedding
-   * near-dup against standing per-cluster exemplar state. The caller
-   * assigns each arriving vector to the LANDED k-means centroids
-   * upstream (a broadcast stream-static join — the q91 landed-artifact
-   * discipline; `cell` is the centroid id), and this processor keeps
-   * the first arrival of each semantic neighborhood: a row whose exact
-   * cosine against ANY kept exemplar of its cell reaches `minCosine`
-   * emits keep=0 with the matching exemplar id (earliest exemplar
-   * wins — the scan runs oldest-first, so attribution is
-   * deterministic); otherwise it emits keep=1 and joins the state.
-   *
-   * State bound: `maxExemplars` vectors per cell — q189's own
-   * `maxClusterSize` bound re-used as the state bound. A cell at
-   * capacity stops ADMITTING exemplars but keeps comparing: overflow
-   * arrivals emit keep=1/capped=1 (the honest "this cell is no longer
-   * deduplicating new neighborhoods" flag, mirroring the batch
-   * operator dropping oversized clusters whole rather than doing
-   * cluster-squared work).
-   *
-   * Stream ≡ batch: on an id-ordered replay whose components are
-   * min-id stars (each near-dup matches its neighborhood's first
-   * arrival directly — the planted-fixture shape), the keep-set equals
-   * batch [[graft.operators.VectorSearch.semanticDedup]]'s: the min id
-   * arrives first, is kept, and every later member cosine-matches it.
-   * StreamSemanticDedupSpec pins that equality plus the cap-pressure
-   * contract.
-   */
-  class SemanticDedupProcessor(minCosine: Double, maxExemplars: Int)
-      extends StatefulProcessor[Long, SemIn, SemOut] {
-    @transient private var st: ValueState[SemState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SemState]("sem",
-        Encoders.product[SemState], TTLConfig.NONE)
-
-    override def handleInputRows(cell: Long, rows: Iterator[SemIn],
-        timers: TimerValues): Iterator[SemOut] = {
-      // newest exemplar at the head; matching scans oldest-first
-      var ex: List[SemEx] = if (st.exists()) st.get().ex else Nil
-      val out = scala.collection.mutable.ArrayBuffer[SemOut]()
-      var changed = false
-      rows.toArray.sortBy(r => (r.t, r.tie)).foreach { r =>
-        val hit = ex.reverseIterator.find { e =>
-          var s = 0.0; var i = 0
-          while (i < r.v.length) { s += r.v(i) * e.v(i); i += 1 }
-          s / (r.nrm * e.nrm) >= minCosine
-        }
-        hit match {
-          case Some(e) => out += SemOut(cell, r.vid, 0, 0, Some(e.vid))
-          case None if ex.length < maxExemplars =>
-            ex = SemEx(r.vid, r.v, r.nrm) :: ex
-            changed = true
-            out += SemOut(cell, r.vid, 1, 0, None)
-          case None =>
-            out += SemOut(cell, r.vid, 1, 1, None)
-        }
-      }
-      if (changed) st.update(SemState(ex))
-      out.iterator
-    }
-  }
-
-  /** [[SemanticDedupProcessor]] over a (cell, t, tie, vid, v, nrm)
-    * frame — cell = landed-centroid assignment, v/nrm the prepped
-    * double vector and its L2 norm. */
-  def semanticDedupStream(rows: DataFrame, minCosine: Double,
-      maxExemplars: Int): Dataset[SemOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("cell"), col("t"), col("tie"), col("vid"),
-      col("v"), col("nrm"))
-      .as[SemIn]
-      .groupByKey(_.cell)
-      .transformWithState(new SemanticDedupProcessor(minCosine, maxExemplars),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class CusumIn(k: String, t: Long, v: Long)
-  final case class CusumSt(up: Long, dn: Long)
-  final case class CusumOut(k: String, t: Long, v: Long, sUp: Long,
-    alarmUp: Int, sDn: Long, alarmDn: Int)
-
-  /**
-   * Streaming twin of `StatsOps.cusum` (q252) — the live drift monitor
-   * over a per-cell metric feed. Where the batch operator distributes
-   * the recursion via the prefix-min identity, the stream runs the
-   * recursions S⁺ = max(0, S⁺ + x − kUp) / S⁻ = max(0, S⁻ + kDn − x)
-   * DIRECTLY — sequential-per-key is the stream's natural shape — with
-   * exactly TWO longs of state per cell, surviving micro-batch
-   * boundaries through the checkpoint. Rows sort by t inside each
-   * batch; across batches the state continues the walk, so a series
-   * split over any boundary is bit-identical to the batch operator on
-   * the concatenated input (StreamCusumSpec's equivalence claim).
-   * Requires time-ordered batch arrival per cell, the
-   * [[RunningRecurrenceProcessor]] contract.
-   */
-  class CusumProcessor(kUp: Long, hUp: Long, kDn: Long, hDn: Long)
-      extends StatefulProcessor[String, CusumIn, CusumOut] {
-    @transient private var st: ValueState[CusumSt] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CusumSt]("cusum",
-        Encoders.product[CusumSt], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[CusumIn],
-        timers: TimerValues): Iterator[CusumOut] = {
-      val sorted = rows.toArray.sortBy(_.t)
-      var s = if (st.exists()) st.get() else CusumSt(0L, 0L)
-      val out = sorted.map { r =>
-        s = CusumSt(math.max(0L, s.up + r.v - kUp),
-          math.max(0L, s.dn + kDn - r.v))
-        CusumOut(r.k, r.t, r.v, s.up, if (s.up > hUp) 1 else 0,
-          s.dn, if (s.dn > hDn) 1 else 0)
-      }
-      if (sorted.nonEmpty) st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[CusumProcessor]] over a (k, t, v) frame. */
-  def cusumStream(rows: DataFrame, kUp: Long, hUp: Long, kDn: Long,
-      hDn: Long): Dataset[CusumOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("v"))
-      .as[CusumIn]
-      .groupByKey(_.k)
-      .transformWithState(new CusumProcessor(kUp, hUp, kDn, hDn),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class SprtIn(k: String, t: Long, succ: Long)
-  final case class SprtSt(n: Long, s: Long, dec: Int, nDec: Long,
-    sDec: Long, llrDec: Long)
-  final case class SprtOut(k: String, t: Long, n: Long, s: Long,
-    llr: Long, decision: String, nDec: Option[Long],
-    sDec: Option[Long], llrDec: Option[Long])
-
-  /**
-   * Streaming twin of `StatsOps.sprtBernoulli` (q265) — and the one
-   * operator in the family whose NATIVE shape is the stream: SPRT
-   * exists to stop an experiment the moment the evidence crosses, so
-   * the live walk IS the product, the batch operator its offline
-   * replay. Per cell, three longs + a latch of state: trial and
-   * success counters drive LLR = s·a + (n−s)·b on the same Q20
-   * lattice constants as the batch plan (passed in, computed ONCE by
-   * the caller — the shared-literal discipline), and the FIRST
-   * boundary crossing latches (decision, n_dec, s_dec, llr_dec)
-   * permanently — later arrivals keep reporting the latched call, so
-   * a restart mid-experiment or post-decision is indistinguishable
-   * from an unbroken run (StreamSprtSpec's equivalence claim vs the
-   * batch first-crossing row). Requires time-ordered batch arrival
-   * per cell, the [[RunningRecurrenceProcessor]] contract.
-   */
-  class SprtProcessor(a: Long, b: Long, up: Long, lo: Long)
-      extends StatefulProcessor[String, SprtIn, SprtOut] {
-    @transient private var st: ValueState[SprtSt] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SprtSt]("sprt",
-        Encoders.product[SprtSt], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SprtIn],
-        timers: TimerValues): Iterator[SprtOut] = {
-      val sorted = rows.toArray.sortBy(_.t)
-      var s = if (st.exists()) st.get() else SprtSt(0L, 0L, 0, 0L, 0L, 0L)
-      val out = sorted.map { r =>
-        s = s.copy(n = s.n + 1, s = s.s + r.succ)
-        val llr = s.s * a + (s.n - s.s) * b
-        if (s.dec == 0 && (llr >= up || llr <= lo))
-          s = s.copy(dec = if (llr >= up) 1 else 2, nDec = s.n,
-            sDec = s.s, llrDec = llr)
-        val decided = s.dec != 0
-        SprtOut(r.k, r.t, s.n, s.s, llr,
-          if (s.dec == 1) "h1" else if (s.dec == 2) "h0" else "continue",
-          if (decided) Some(s.nDec) else None,
-          if (decided) Some(s.sDec) else None,
-          if (decided) Some(s.llrDec) else None)
-      }
-      if (sorted.nonEmpty) st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[SprtProcessor]] over a (k, t, succ) frame; the lattice
-    * constants come from `FixedLog.log2q20` differences exactly as
-    * `StatsOps.sprtBernoulli` computes them. */
-  def sprtStream(rows: DataFrame, p0Ppm: Long, p1Ppm: Long,
-      alphaPpm: Long = 50000L, betaPpm: Long = 50000L)
-      : Dataset[SprtOut] = {
-    import rows.sparkSession.implicits._
-    val L = graft.functions.FixedLog.log2q20 _
-    val a = L(p1Ppm) - L(p0Ppm)
-    val b = L(1000000L - p1Ppm) - L(1000000L - p0Ppm)
-    val up = L(1000000L - betaPpm) - L(alphaPpm)
-    val lo = L(betaPpm) - L(1000000L - alphaPpm)
-    rows.select(col("k"), col("t"), col("succ"))
-      .as[SprtIn]
-      .groupByKey(_.k)
-      .transformWithState(new SprtProcessor(a, b, up, lo),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class RunsIn(k: String, t: Long, b: Long)
-  final case class RunsSt(n: Long, n1: Long, chg: Long, lastB: Long)
-  final case class RunsOut(k: String, t: Long, n: Long, n1: Long,
-    n0: Long, rRuns: Long, zMilli: Option[Long])
-
-  /**
-   * Streaming twin of `StatsOps.runsTest` (q279) — the live
-   * exchangeability monitor: is the arriving per-cell flag sequence
-   * still iid, or has it started clumping (a regime switch, a sticky
-   * failure, a batched spam burst — conditions a mean-level monitor
-   * like CUSUM can miss entirely when the rate doesn't move). The
-   * stream IS the batch operator's hierarchical decomposition taken
-   * to its limit: the batch counts runs per order-bucket and resolves
-   * boundaries on a bounded frame; here each micro-batch is a bucket
-   * and the carried last flag IS the boundary term, so four longs of
-   * state per cell replay the exact batch counts. Every row emits
-   * the running (n, n1, n0, R) and the z on the batch operator's own
-   * STAGED lattice (restaged with the batch form per the r14 advice)
-   * — rad = min(⌊⌊10⁶·|dnum|/m2⌋·|dnum|·(n−1)/(m2−n)⌋, 10¹²) in exact
-   * BigInt, z = sign·⌊√rad⌋ (None while 2n₁n₀ ≤ n, the batch guard)
-   * — so the
-   * final row per cell is bit-equal to the batch summary across
-   * checkpointed restarts (StreamRunsSpec). Requires time-ordered
-   * batch arrival per cell, the [[SprtProcessor]] contract.
-   */
-  class RunsProcessor extends StatefulProcessor[String, RunsIn, RunsOut] {
-    @transient private var st: ValueState[RunsSt] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RunsSt]("runs",
-        Encoders.product[RunsSt], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[RunsIn],
-        timers: TimerValues): Iterator[RunsOut] = {
-      val sorted = rows.toArray.sortBy(_.t)
-      var s = if (st.exists()) st.get() else RunsSt(0L, 0L, 0L, -1L)
-      val out = sorted.map { r =>
-        val flag = if (r.b > 0L) 1L else 0L
-        val chg =
-          if (s.n > 0L && flag != s.lastB) s.chg + 1L else s.chg
-        s = RunsSt(s.n + 1L, s.n1 + flag, chg, flag)
-        val n0 = s.n - s.n1
-        val m2 = BigInt(2) * s.n1 * n0
-        val z = if (s.n > 1L && m2 > s.n) {
-          val dnum = BigInt(s.chg + 1L) * s.n - s.n - m2
-          val t1 = (BigInt(1000000) * dnum.abs) / m2
-          val rad = ((t1 * dnum.abs * (s.n - 1)) / (m2 - s.n))
-            .min(BigInt(1000000000000L))
-          val mag = math.floor(math.sqrt(rad.toDouble)).toLong
-          Some(dnum.signum * mag)
-        } else None
-        RunsOut(r.k, r.t, s.n, s.n1, n0, s.chg + 1L, z)
-      }
-      if (sorted.nonEmpty) st.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[RunsProcessor]] over a (k, t, b) frame. */
-  def runsStream(rows: DataFrame): Dataset[RunsOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("b"))
-      .as[RunsIn]
-      .groupByKey(_.k)
-      .transformWithState(new RunsProcessor(),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class HampelIn(k: String, t: Long, v: Long)
-  final case class HampelOut(k: String, t: Long, n: Long, med: Long,
-    mad: Long, nOut: Long, outPpm: Long)
-
-  /**
-   * Streaming twin of `StatsOps.hampelOutliers` (q285) — the 22nd
-   * batch≡stream pair: ingest-time ROBUST outlier alerting. The batch
-   * operator audits a landed table for values beyond k·MAD of the
-   * median; live, the same question is "is this feed spiking right
-   * now" — and mean/σ monitors are exactly what a spike corrupts
-   * (the outliers inflate σ and hide themselves), which is why the
-   * robust median/MAD pair is the production form.
-   *
-   * State is the batch operator's own (cell, value)-count spine as a
-   * [[MapState]] histogram — bounded by per-cell VALUE CARDINALITY
-   * (quantized domains: cents, bucketed latencies), never by stream
-   * length; per-row work is one RocksDB point update. Each
-   * micro-batch folds its arrivals in and emits ONE summary row per
-   * touched cell (the alert cadence), recomputing the lower median,
-   * the MAD and the k·MAD exceedance count from the histogram with
-   * the batch operator's exact conventions (lower medians — smallest
-   * value with 2·cum ≥ n; out_ppm = ⌊10⁶·n_out/n⌋) — so the last
-   * emitted row per cell is bit-equal to the batch summary across
-   * checkpointed restarts, even when a restart splits a planted spike
-   * cluster mid-series (StreamHampelSpec). The emitted `t` is the
-   * RUNNING max event time (one extra ValueState long), not the
-   * current micro-batch's max — so "last row per cell = max t" stays
-   * correct even under out-of-order batch arrival, with no
-   * time-ordered-arrival contract required (unlike RunsProcessor,
-   * whose sequence statistic inherently needs ordered arrival).
-   *
-   * STATE-SCHEMA NOTE (r16 advice #3): the `tmax` ValueState was added
-   * in r16 — a checkpoint written by the pre-r16 processor (hist-only
-   * state) fails transformWithState state-schema validation on
-   * restart, so such checkpoints are NOT resumable across that
-   * upgrade. All in-repo streams start fresh per test; a long-lived
-   * deployment upgrading across this boundary must either drain and
-   * restart the query with a new checkpoint dir or enable state-schema
-   * evolution support before adopting the new processor.
-   */
-  class HampelProcessor(kMad: Long)
-      extends StatefulProcessor[String, HampelIn, HampelOut] {
-    @transient private var hist:
-      org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    // running max event time across ALL batches seen, not just the
-    // current one — under out-of-order batch arrival a later
-    // (larger-n) summary would otherwise carry a smaller t and the
-    // documented "last emitted row per cell = max t" selection would
-    // pick a stale row (r15 advice)
-    @transient private var tMaxSt:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      hist = getHandle.getMapState[Long, Long]("hist",
-        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      tMaxSt = getHandle.getValueState[Long]("tmax",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    /** Lower median of a (value, count) histogram sorted by value:
-      * the smallest value whose inclusive cum count reaches n/2 —
-      * the batch operator's convention, both calls. */
-    private def lowerMedian(sorted: Array[(Long, Long)], n: Long): Long = {
-      var cum = 0L
-      sorted.iterator
-        .map { case (v, c) => cum += c; (v, cum) }
-        .collectFirst { case (v, cm) if 2L * cm >= n => v }
-        .get
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[HampelIn],
-        timers: TimerValues): Iterator[HampelOut] = {
-      var tMax = if (tMaxSt.exists()) tMaxSt.get() else Long.MinValue
-      var any = false
-      rows.foreach { r =>
-        any = true
-        if (r.t > tMax) tMax = r.t
-        val c = if (hist.containsKey(r.v)) hist.getValue(r.v) else 0L
-        hist.updateValue(r.v, c + 1L)
-      }
-      if (!any) Iterator.empty
-      else {
-        tMaxSt.update(tMax)
-        val h = hist.iterator().toArray.sortBy(_._1)
-        val n = h.iterator.map(_._2).sum
-        val med = lowerMedian(h, n)
-        val dev = h.groupBy { case (v, _) => math.abs(v - med) }
-          .iterator.map { case (d, cs) => (d, cs.iterator.map(_._2).sum) }
-          .toArray.sortBy(_._1)
-        val mad = lowerMedian(dev, n)
-        val nOut = h.iterator
-          .collect { case (v, c) if math.abs(v - med) > kMad * mad => c }
-          .sum
-        val outPpm = ((BigInt(1000000) * nOut) / n).toLong
-        Iterator.single(HampelOut(key, tMax, n, med, mad, nOut, outPpm))
-      }
-    }
-  }
-
-  /** [[HampelProcessor]] over a (k, t, v) frame. */
-  def hampelStream(rows: DataFrame, kMad: Long = 3L): Dataset[HampelOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("t"), col("v"))
-      .as[HampelIn]
-      .groupByKey(_.k)
-      .transformWithState(new HampelProcessor(kMad),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class UniTokIn(k: String, w: String)
-  final case class UniTokOut(k: String, nWords: Long, nCharTokens: Long,
-    nUniTokens: Long, costQ20: Long)
-  final case class UniTokState(nWords: Long, nChars: Long, nPieces: Long,
-    cost: Long)
-
-  /**
-   * Streaming twin of `UnigramLM.encodeStats` (q295) — the 23rd
-   * batch≡stream pair: ingest-time unigram tokenization against the
-   * LANDED q294 model, the statistic an LLM ingest pipeline actually
-   * runs live (token counts and encoding cost per document as the
-   * corpus arrives, not after it lands). The piece-cost table is a
-   * capped model artifact, so it rides along as a plain literal map
-   * (the batch side's own collected-to-literals discipline) and the
-   * per-word Viterbi is a bounded O(WordMaxLen·PieceMaxLen) in-memory
-   * DP — the cheapest per-row work of any twin. The DP replays the
-   * batch lattice EXACTLY: integer Q20 costs, arg-min by
-   * (cost, n_pieces, seg) with the same ASCII-bytewise seg tie-break
-   * `least(struct…)` applies, words with out-of-model characters (or
-   * longer than WordMaxLen) dropped from ALL stats, batch-identically.
-   *
-   * State is FOUR longs per document (the running encodeStats sums) —
-   * O(1) per key, not per word. Each micro-batch emits the updated
-   * running summary per touched doc; n_words is monotone, so the
-   * max-n_words row per doc is the final one and equals the batch
-   * encodeStats row bit-for-bit across checkpointed restarts that
-   * split a document's words over micro-batches (StreamUnigramSpec).
-   */
-  class UnigramTokenizeProcessor(pieces: Map[String, Long])
-      extends StatefulProcessor[String, UniTokIn, UniTokOut] {
-    import graft.operators.UnigramLM.{PieceMaxLen, WordMaxLen}
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[UniTokState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[UniTokState]("uni",
-        Encoders.product[UniTokState], TTLConfig.NONE)
-
-    /** The batch viterbi's (cost, n_pieces, seg) arg-min as a plain
-      * array DP; None when the word is unencodable or over-length (the
-      * batch drops both). Seg strings are lowercase-ASCII, so Scala's
-      * code-unit compare equals Spark's UTF8 bytewise order. */
-    private[streaming] def segment(word: String): Option[(Long, Long)] = {
-      val n = word.length
-      if (n < 1 || n > WordMaxLen) return None
-      val ord = Ordering.Tuple3[Long, Long, String]
-      val best = new Array[(Long, Long, String)](n + 1)
-      best(0) = (0L, 0L, "")
-      var i = 1
-      while (i <= n) {
-        var bi: (Long, Long, String) = null
-        var k = 1
-        while (k <= math.min(PieceMaxLen, i)) {
-          val prev = best(i - k)
-          if (prev != null) {
-            pieces.get(word.substring(i - k, i)) match {
-              case Some(c) =>
-                val cand = (prev._1 + c, prev._2 + 1L,
-                  prev._3 + "|" + word.substring(i - k, i))
-                if (bi == null || ord.lt(cand, bi)) bi = cand
-              case None =>
-            }
-          }
-          k += 1
-        }
-        best(i) = bi
-        i += 1
-      }
-      Option(best(n)).map(b => (b._2, b._1))
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[UniTokIn],
-        timers: TimerValues): Iterator[UniTokOut] = {
-      var s = if (st.exists()) st.get() else UniTokState(0L, 0L, 0L, 0L)
-      var touched = false
-      rows.foreach { r =>
-        segment(r.w).foreach { case (np, c) =>
-          touched = true
-          s = UniTokState(s.nWords + 1L, s.nChars + r.w.length,
-            s.nPieces + np, s.cost + c)
-        }
-      }
-      if (!touched) Iterator.empty
-      else {
-        st.update(s)
-        Iterator.single(
-          UniTokOut(key, s.nWords, s.nChars, s.nPieces, s.cost))
-      }
-    }
-  }
-
-  /** [[UnigramTokenizeProcessor]] over a (k, w) frame; `pieces` is the
-    * landed model's (piece → cost_q20) map. */
-  def unigramTokenizeStream(rows: DataFrame,
-      pieces: Map[String, Long]): Dataset[UniTokOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("k"), col("w"))
-      .as[UniTokIn]
-      .groupByKey(_.k)
-      .transformWithState(new UnigramTokenizeProcessor(pieces),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  final case class DomCapIn(dom: String, id: Long, w: Long)
-  final case class DomCapSt(nTotal: Long, totalW: Long,
-    keptW: Array[Long], keptId: Array[Long])
-  final case class DomCapOut(dom: String, n_total: Long, n_kept: Long,
-    n_dropped: Long, kept_id_sum: Long, kept_weight: Long,
-    dropped_weight: Long)
-
-  /**
-   * Streaming twin of `UrlCuration.capPerDomain` (q297) — the 24th
-   * batch≡stream pair: INGEST-TIME per-domain document caps with the
-   * same honest truncation accounting. A crawl pipeline applies the
-   * domain cap while landing, not in a nightly batch — the monster
-   * domain the cap exists for is exactly the one whose full tail you
-   * never want on disk.
-   *
-   * State per domain is the running top-K (weight desc, id asc — the
-   * batch operator's exact keep rule) plus two totals longs: O(K)
-   * state per key, bounded by the CAP, never by stream length — the
-   * stream-side analogue of the WindowGroupLimit partial top-K the
-   * batch plan runs before its shuffle. Unlike the recurrence twins
-   * (CUSUM/runs), the running top-K and the totals are COMMUTATIVE in
-   * the input set, so no time-ordered-arrival contract is needed:
-   * any batch split, any within-batch order, same final state. Each
-   * micro-batch emits ONE accounting row per touched domain; the last
-   * emitted row per domain (largest n_total — strictly monotone per
-   * touch) is bit-equal to the batch operator's row on the
-   * concatenated input across checkpointed restarts
-   * (StreamDomainCapSpec). Document ids must be unique across the
-   * stream (the q22/q33 ingest-dedup contract upstream); a redelivered
-   * id would double-count in both engines alike.
-   */
-  class DomainCapProcessor(k: Int)
-      extends StatefulProcessor[String, DomCapIn, DomCapOut] {
-    require(k >= 1, s"k must be >= 1, got $k")
-    @transient private var st: ValueState[DomCapSt] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DomCapSt]("domcap",
-        Encoders.product[DomCapSt], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[DomCapIn],
-        timers: TimerValues): Iterator[DomCapOut] = {
-      val incoming = rows.toArray
-      if (incoming.isEmpty) Iterator.empty
-      else {
-        val s = if (st.exists()) st.get()
-          else DomCapSt(0L, 0L, Array.empty, Array.empty)
-        val nTotal = s.nTotal + incoming.length
-        val totalW = s.totalW + incoming.iterator.map(_.w).sum
-        val merged = (s.keptW.indices.map(i => (s.keptW(i), s.keptId(i)))
-            ++ incoming.iterator.map(r => (r.w, r.id)))
-          .sortBy { case (w, id) => (-w, id) }
-          .take(k)
-        st.update(DomCapSt(nTotal, totalW,
-          merged.map(_._1).toArray, merged.map(_._2).toArray))
-        val keptW = merged.iterator.map(_._1).sum
-        val keptIdSum = merged.iterator.map(_._2).sum
-        Iterator.single(DomCapOut(key, nTotal, merged.length.toLong,
-          nTotal - merged.length.toLong, keptIdSum, keptW,
-          totalW - keptW))
-      }
-    }
-  }
-
-  /** [[DomainCapProcessor]] over a (dom, id, w) frame. */
-  def domainCapStream(rows: DataFrame, k: Int): Dataset[DomCapOut] = {
-    import rows.sparkSession.implicits._
-    rows.select(col("dom"), col("id"), col("w"))
-      .as[DomCapIn]
-      .groupByKey(_.dom)
-      .transformWithState(new DomainCapProcessor(k),
         TimeMode.None(), OutputMode.Append())
   }
 }

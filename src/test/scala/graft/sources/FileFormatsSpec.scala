@@ -65,42 +65,6 @@ class FileFormatsSpec extends SparkSuite {
     assert(spark.read.option("header", "true").csv(csv).columns.length === 40)
   }
 
-  test("v1->v2 schema evolution: v1 files beside v2 files read as one union with nulls") {
-    import org.apache.spark.sql.functions.col
-    val flat = HfpFlatten.flatten(HfpPipelineQueries.goodEnvelope(spark),
-      strictTst = false)
-    val vehs = flat.select("veh").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val cut = vehs(vehs.length / 2)
-    val dir = Files.createTempDirectory("veh_evolve_").toString
-    // pre-migration files: the v2 columns do not exist AT ALL
-    flat.filter(col("veh") < cut)
-      .drop(graft.streaming.EvolvedLanding.V2Columns: _*)
-      .write.mode("append").parquet(dir)
-    // post-migration files: the full 40-column relation
-    flat.filter(col("veh") >= cut).write.mode("append").parquet(dir)
-
-    // the DEFAULT reader plans from one sampled footer: if it samples a
-    // v1 file the v2 columns vanish — the trap EvolvedLanding.read closes
-    val merged = graft.streaming.EvolvedLanding.read(spark, dir)
-    assert(merged.columns.length === 40)
-    assert(graft.streaming.EvolvedLanding.V2Columns.forall(merged.columns.contains))
-
-    // v1-origin rows surface every v2 column as null…
-    val v1Rows = merged.filter(col("veh") < cut)
-    assert(v1Rows.count() > 0)
-    graft.streaming.EvolvedLanding.V2Columns.foreach { c =>
-      assert(v1Rows.filter(col(c).isNotNull).count() === 0, s"v1 rows leak $c")
-    }
-    // …and v2-origin rows keep their values, identical to the source
-    val got = merged.filter(col("veh") >= cut)
-      .orderBy("received_at", "veh").collect().toSeq
-    val want2 = flat.filter(col("veh") >= cut)
-      .select(merged.columns.map(col).toSeq: _*)
-      .orderBy("received_at", "veh").collect().toSeq
-    assert(got === want2)
-  }
-
   test("malformed file rows dead-letter instead of poisoning the read " +
       "(PERMISSIVE corrupt-record capture; DROPMALFORMED; FAILFAST)") {
     import org.apache.spark.sql.functions.col

@@ -33,6 +33,20 @@ class HfpPipelineSpec extends SparkSuite {
     assert(dead.count() === 3)
   }
 
+  test("splitInvalidPayload dead-letters non-v2 and short topics; good + dead = input") {
+    val raw = Seq(
+      (goodTopic, goodPayload, 1L),
+      (goodTopic.replace("/hfp/v2/", "/hfp/v1/"), goodPayload, 2L), // v1 layout
+      ("/hfp", goodPayload, 3L),                                    // no version segment
+      (null, goodPayload, 4L)
+    ).toDF("topic", "payload", "received_at")
+    val (good, dead) = HfpRawIngest.splitInvalidPayload(HfpRawIngest.toEnvelope(raw))
+    assert(good.select(col("topic.received_at")).as[Long].collect().toSeq === Seq(1L))
+    assert(dead.select(col("topic.received_at")).as[Long].collect().sorted.toSeq ===
+      Seq(2L, 3L, 4L))
+    assert(good.count() + dead.count() === raw.count())
+  }
+
   test("end-to-end: one wire record flattens to the reference's parsed values") {
     val raw = Seq((goodTopic, goodPayload, 1717574401500L))
       .toDF("topic", "payload", "received_at")

@@ -122,6 +122,31 @@ class JdbcSinkSpec extends SparkSuite {
       "SELECT COUNT(*) FROM vehicles_commits")(_.getInt(1)) === 2)
   }
 
+  test("idempotent mode after a restart: a new sink over an existing ledger " +
+      "writes new batches and skips a replayed one") {
+    val in = tmp("jdbc_in_")
+    Seq((topic, payload(854), 1L), (topic, payload(855), 2L))
+      .toDF("topic", "payload", "received_at")
+      .coalesce(1).write.mode("append").json(in)
+    val url = createDb("sink_restart")
+    val env = graft.sources.HfpRawIngest.toEnvelope(
+      spark.read.schema(HfpStreamPipeline.wireSchema).json(in))
+    val flat = graft.operators.HfpFlatten.flatten(env, strictTst = false)
+    new JdbcVehiclesSink(url, "vehicles", idempotent = true)
+      .write(flat, batchId = 0L)
+    val ledgerRows = query(url,
+      "SELECT COUNT(*) FROM vehicles_commits")(_.getInt(1))
+    assert(ledgerRows > 0)
+    // the restarted query builds a fresh sink: its ledger already exists
+    val restarted = new JdbcVehiclesSink(url, "vehicles", idempotent = true)
+    restarted.write(flat, batchId = 1L)
+    assert(query(url, "SELECT COUNT(*) FROM vehicles")(_.getInt(1)) === 4)
+    restarted.write(flat, batchId = 0L) // replay of batch 0 → ledger hit
+    assert(query(url, "SELECT COUNT(*) FROM vehicles")(_.getInt(1)) === 4)
+    assert(query(url,
+      "SELECT COUNT(*) FROM vehicles_commits")(_.getInt(1)) === 2 * ledgerRows)
+  }
+
   test("singleTransaction + idempotent compose: one txn per batch, ledger consulted on replay") {
     val in = tmp("jdbc_in_")
     Seq((topic, payload(854), 1L), (topic, payload(855), 2L))
